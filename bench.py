@@ -357,10 +357,18 @@ def main() -> None:
     budget_sec = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "3300"))
     soft_deadline = bench_t0 + 0.85 * budget_sec if budget_sec > 0 else None
     budget_stats = {"passes_skipped": 0, "resamples_skipped": 0,
-                    "stream_reps_skipped": 0}
+                    "reps_skipped": 0}
 
     def past_soft_deadline() -> bool:
         return soft_deadline is not None and time.perf_counter() > soft_deadline
+
+    def budgeted_reps(n: int) -> int:
+        """Samples to take for one streaming/KV row: ``n``, or one past
+        the soft deadline, with every skipped sample counted."""
+        if n > 1 and past_soft_deadline():
+            budget_stats["reps_skipped"] += n - 1
+            return 1
+        return n
 
     # Contention guard: a loaded host inflates every sample uniformly
     # (rounds 2 and 4 both recorded phantom regressions with load_avg > 3
@@ -593,7 +601,7 @@ def main() -> None:
         if state_partitions:
             spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
         samples = []
-        for i in range(1 if past_soft_deadline() else repeats):
+        for i in range(budgeted_reps(repeats)):
             # glob form: the file stream source requires a directory/glob path
             src = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
             src = normalize_event_ts(src)
@@ -653,10 +661,7 @@ def main() -> None:
             # vs 1.3s warm measured at sf0.1), and a single-shot number
             # is also contention-exposed — exactly what medians fix.
             samples = []
-            if past_soft_deadline() and reps > 1:
-                budget_stats["stream_reps_skipped"] += reps - 1
-                reps = 1
-            for _ in range(reps):
+            for _ in range(budgeted_reps(reps)):
                 t0 = time.perf_counter()
                 q = start_query()
                 q.awaitTermination()
@@ -878,7 +883,7 @@ def main() -> None:
                 )
 
             samples = []
-            for _ in range(1 if past_soft_deadline() else repeats):
+            for _ in range(budgeted_reps(repeats)):
                 t0 = time.perf_counter()
                 q = fan_in_query()
                 q.awaitTermination()
@@ -919,7 +924,7 @@ def main() -> None:
                 )
 
             samples = []
-            for _ in range(1 if past_soft_deadline() else repeats):
+            for _ in range(budgeted_reps(repeats)):
                 t0 = time.perf_counter()
                 q = fan_in_one_source_query()
                 q.awaitTermination()
@@ -965,7 +970,7 @@ def main() -> None:
         # anywhere in that band depending on what ran before it, which
         # is exactly the r7->r8 748k->585k "regression" (PERF.md r9).
         kv_samples = []
-        for i in range(1 if past_soft_deadline() else max(repeats, 2)):
+        for i in range(budgeted_reps(max(repeats, 2))):
             t0 = time.perf_counter()
             table = DurableLocalTable.open(
                 spark, f"{kv_root}/store1_{i}", key_cols=["k"],

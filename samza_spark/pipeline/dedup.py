@@ -9,8 +9,8 @@ Scale design (100 TB corpora):
 * MinHash hot path: words hashed once JVM-side (``xxhash64``), then n-gram
   mixing + permutations + band folding fused in one Arrow-batched numpy
   UDF; candidates come from ONE shuffle (groupBy band bucket) with
-  in-bucket pair expansion — never O(n²). A pure-Catalyst expression path
-  remains as ``impl="sql"``.
+  in-bucket pair expansion — never O(n²). Char-shingle mode hashes each
+  distinct shingle JVM-side and MinHashes with the same numpy family.
 * candidate verification (exact Jaccard) first semi-joins the corpus down
   to candidate-pair members, so its cost tracks the candidate set.
 * SimHash: numpy bit-matrix majority vote per batch; near-dup = hamming
@@ -39,23 +39,11 @@ from samza_spark.pipeline.text import normalized
 logger = logging.getLogger(__name__)
 
 
-def jaccard_pairs_pandas(a: str, b: str) -> Column:
-    """Per-pair exact Jaccard |A∩B| / |A∪B| as an Arrow batch kernel —
-    the drop-in replacement for ``size(array_intersect(..)) /
-    size(array_union(..))`` on candidate-pair verify paths. The counts
-    are exact integers (Python set algebra — duplicates collapse just
-    as the SQL set functions collapse them) and the single int/int
-    division is the same one IEEE op both Spark and DuckDB perform, so
-    the doubles are bit-identical to the expression it replaces; what
-    changes is the execution class — one vectorized batch per Arrow
-    block instead of an interpreted collection expression inside a
-    join condition (r10 verdict next #1: that class degrades ~40% as a
-    long-lived JVM's eval() call sites go megamorphic).
-
-    NULL on either side → NULL, as the SQL form. An empty union (both
-    arrays empty — unreachable for shingle inputs, which floor at one
-    shingle) → NULL, where the ANSI SQL form would raise
-    DIVIDE_BY_ZERO.
+def jaccard_ppm_pandas(a: str, b: str) -> Column:
+    """Integer-exact Jaccard in ppm — ``|A∩B| * 1_000_000 div |A∪B|``
+    as an Arrow batch kernel (all arithmetic is Python integers, so
+    there is nothing float to drift from the SQL ``div`` form or the
+    DuckDB oracle). NULL on either side → NULL; an empty union → NULL.
 
     PROJECTION-ONLY: the returned Column is ``asNondeterministic()`` (a
     pure function — the flag is an optimizer annotation that stops the
@@ -64,37 +52,6 @@ def jaccard_pairs_pandas(a: str, b: str) -> Column:
     bind it with ``withColumn``/``select`` and filter/join on the
     materialized attribute; referencing it twice in one select also
     evaluates it twice (bind once, derive the rest)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def jac(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = np.full(len(sa), np.nan)
-        for i in range(len(sa)):
-            x, y = sa.iat[i], sb.iat[i]
-            if x is None or y is None:
-                continue
-            s1, s2 = set(x), set(y)
-            nu = len(s1 | s2)
-            if nu:
-                out[i] = np.float64(len(s1 & s2)) / np.float64(nu)
-        return pd.Series(out)
-
-    # non-deterministic stops the optimizer cloning the kernel below the
-    # threshold filter (a deterministic UDF column referenced by a filter
-    # is evaluated once for the filter and AGAIN for the projection — two
-    # ArrowEvalPython nodes per verify path; every candidate pair paid
-    # the kernel twice)
-    return jac.asNondeterministic()(F.col(a), F.col(b))
-
-
-def jaccard_ppm_pandas(a: str, b: str) -> Column:
-    """Integer-exact Jaccard in ppm — ``|A∩B| * 1_000_000 div |A∪B|``
-    as an Arrow batch kernel (the fixed-point twin of
-    :func:`jaccard_pairs_pandas`; all arithmetic is Python integers, so
-    there is nothing float to drift from the SQL ``div`` form or the
-    DuckDB oracle). NULL on either side → NULL. PROJECTION-ONLY: the
-    Column is non-deterministic — see :func:`jaccard_pairs_pandas`."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -110,7 +67,9 @@ def jaccard_ppm_pandas(a: str, b: str) -> Column:
                 vals[i] = (len(s1 & s2) * 1_000_000) // nu
         return pd.Series(vals, dtype="Int64")
 
-    # see jaccard_pairs_pandas: single evaluation under filters
+    # non-deterministic stops the optimizer cloning the kernel below a
+    # threshold filter (a deterministic UDF column referenced by a filter
+    # is evaluated once for the filter and AGAIN for the projection)
     return jp.asNondeterministic()(F.col(a), F.col(b))
 
 
@@ -120,7 +79,7 @@ def sig_match_ppm_pandas(a: str, b: str, denom: int) -> Column:
     div denom``: count equal positions over the common prefix (the
     fold's NULL-padded tail never survives its filter), exact integer
     division. NULL on either side → NULL. PROJECTION-ONLY: the Column is
-    non-deterministic — see :func:`jaccard_pairs_pandas`."""
+    non-deterministic — see :func:`jaccard_ppm_pandas`."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -140,7 +99,7 @@ def sig_match_ppm_pandas(a: str, b: str, denom: int) -> Column:
             vals[i] = eq * 1_000_000 // d
         return pd.Series(vals, dtype="Int64")
 
-    # see jaccard_pairs_pandas: single evaluation under filters
+    # see jaccard_ppm_pandas: single evaluation under filters
     return mp.asNondeterministic()(F.col(a), F.col(b))
 
 
@@ -229,23 +188,6 @@ def word_ngrams(text_col: str, n: int = 3) -> Column:
     )
 
 
-def minhash_signature(shingle_col: str, num_perm: int = 64) -> Column:
-    """num_perm-wide MinHash signature over a (pre-projected) shingle-array
-    column.
-
-    Cost model (higher-order functions are interpreted, not codegen'd, so
-    constant factors matter): each shingle is string-hashed exactly once
-    (xxhash64), then each "permutation" re-mixes the 64-bit value with the
-    two-arg xxhash64(perm, h) — integer-only, no per-perm string concat.
-    The permutation loop lives inside the expression (sequence+transform) so
-    the Catalyst tree stays tiny regardless of num_perm (inlining one
-    sub-expression per permutation blows past codegen limits)."""
-    return F.expr(
-        f"transform(sequence(0, {num_perm - 1}), p -> "
-        f"array_min(transform({shingle_col}, h -> xxhash64(p, h))))"
-    )
-
-
 def _shingle_expr(text_col: str, mode: str, k: int) -> Column:
     if mode == "char":
         return char_shingles(text_col, k)
@@ -262,9 +204,9 @@ def minhash_signature_pandas(shingle_hash_col: str, num_perm: int = 64) -> Colum
     multiply-xorshift family ((h + b_p) * a_p, then x ^= x >> 33 — the
     splitmix64 finalizer shape, public domain); the minimum over shingles is
     a single ``np.minimum.reduceat`` over the flattened batch. ~30x faster
-    than the expression path (interpreted HOFs pay per-element dispatch;
-    numpy pays none). Constants come from a fixed seed, so signatures are
-    deterministic across runs and executors."""
+    than an interpreted sequence+transform expression (HOFs pay
+    per-element dispatch; numpy pays none). Constants come from a fixed
+    seed, so signatures are deterministic across runs and executors."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -392,7 +334,6 @@ def _lsh_banded(
     bands: int,
     shingle_k: int,
     shingle_mode: str,
-    impl: str,
 ) -> DataFrame:
     """(id, band, bucket) rows — the shared banding stage of the LSH
     candidate and bucket-stat paths."""
@@ -406,7 +347,7 @@ def _lsh_banded(
     # language docs — the dominant cost is per-shingle hashing.
     spark = df.sparkSession
     n_parts = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
-    if impl == "pandas" and shingle_mode == "word":
+    if shingle_mode == "word":
         # fast path: hash words once JVM-side, everything else fused in
         # one vectorized UDF emitting band buckets directly
         norm = f"trim(regexp_replace(lower({text_col}), '\\\\s+', ' '))"
@@ -425,17 +366,12 @@ def _lsh_banded(
             id_col, F.posexplode("bks").alias("band", "bucket")
         )
     else:
-        sig_expr = (
-            minhash_signature_pandas("__shh", num_perm)
-            if impl == "pandas"
-            else minhash_signature("__shh", num_perm)
-        )
         with_sig = (
             df.repartition(n_parts, F.col(id_col))
             .select(F.col(id_col), _shingle_expr(text_col, shingle_mode, shingle_k).alias("__sh"))
             # hash every distinct shingle once, up front
             .select(F.col(id_col), F.expr("transform(__sh, s -> xxhash64(s))").alias("__shh"))
-            .select(F.col(id_col), sig_expr.alias("sig"))
+            .select(F.col(id_col), minhash_signature_pandas("__shh", num_perm).alias("sig"))
         )
         # per-band bucket ids, again as one expression (band id salts the hash)
         buckets = F.expr(
@@ -458,7 +394,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_k: int = 3,
     shingle_mode: str = "word",
-    impl: str = "pandas",
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
@@ -477,7 +412,7 @@ def minhash_lsh_candidates(
     clusters that big should be caught by exact dedup/quality filters
     first. ``None`` disables the cap."""
     agged = _lsh_bucket_groups(
-        df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode, impl
+        df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode
     )
     if max_bucket_size is not None:
         agged = agged.filter(F.size("ids") <= max_bucket_size)
@@ -485,13 +420,13 @@ def minhash_lsh_candidates(
 
 
 def _lsh_bucket_groups(
-    df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode, impl
+    df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode
 ) -> DataFrame:
     """(band, bucket, ids) for every bucket with ≥2 members — the single
     groupBy shuffle both the pair expansion and the hot-bucket census
     derive from."""
     banded = _lsh_banded(
-        df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode, impl
+        df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode
     )
     return (
         banded.groupBy("band", "bucket")
@@ -526,7 +461,6 @@ def minhash_lsh_candidates_with_census(
     bands: int = 16,
     shingle_k: int = 3,
     shingle_mode: str = "word",
-    impl: str = "pandas",
     max_bucket_size: int = 1000,
 ) -> "tuple[DataFrame, DataFrame]":
     """(pairs, census): candidate pairs under the hot-bucket cap PLUS the
@@ -535,7 +469,7 @@ def minhash_lsh_candidates_with_census(
     instead of re-running the minhash UDF (the data materialized is the
     multi-member buckets the shuffle already built)."""
     agged = _lsh_bucket_groups(
-        df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode, impl
+        df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode
     ).localCheckpoint(eager=True)
     census = agged.filter(F.size("ids") > max_bucket_size).select(
         "band", "bucket", F.size("ids").alias("n_ids")
@@ -552,14 +486,13 @@ def lsh_capped_buckets(
     bands: int = 16,
     shingle_k: int = 3,
     shingle_mode: str = "word",
-    impl: str = "pandas",
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """(band, bucket, n_ids) for buckets the candidate pass drops — the
     'logged count' side of the hot-bucket guard. Same single banding
     shuffle; callers log/alert on ``count()`` of this frame."""
     banded = _lsh_banded(
-        df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode, impl
+        df, text_col, id_col, num_perm, bands, shingle_k, shingle_mode
     )
     return (
         banded.groupBy("band", "bucket")
@@ -576,24 +509,18 @@ def jaccard_verify(
     threshold: float = 0.8,
     shingle_k: int = 5,
     shingle_mode: str = "char",
-    impl: str = "sql",
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs only (the verify stage of
     MinHash-LSH, and the standalone `n-gram Jaccard` dedup when fed
     all-pairs of a small corpus). Returns (a, b, jaccard) ≥ threshold.
 
-    ``impl='sql'`` (default) scores pairs with the codegen
-    ``size(array_intersect)/size(array_union)`` expression;
-    ``impl='kernel'`` uses the Arrow batch kernel
-    (:func:`jaccard_pairs_pandas`) — same doubles (exact int counts, one
-    IEEE division). Guide §4 says the built-in must be BEATEN, not
-    assumed beaten: the r12 settled interleaved A/Bs (twice, values
-    asserted identical) measured the built-in faster on this verify path
-    (minhash_pairs shape: 3.60 s vs 3.86 s median; direct jaccard_verify
-    rerun: 2.13 s vs 2.31 s) — at bench-scale candidate volume the
-    kernel's extra Python stage is pure latency. The kernel remains the
-    measured escape hatch for candidate volumes where per-pair
-    interpreter cost dominates stage latency."""
+    Pairs are scored with the codegen
+    ``size(array_intersect)/size(array_union)`` expression: exact int
+    counts and one IEEE division. The r12 settled interleaved A/Bs
+    (values asserted identical) measured it faster than an Arrow batch
+    kernel on this verify path (minhash_pairs shape: 3.60 s vs 3.86 s
+    median; direct jaccard_verify rerun: 2.13 s vs 2.31 s) — at
+    bench-scale candidate volume a Python stage is pure latency."""
     spark = df.sparkSession
     n_parts = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
     # the pair table is referenced three times below (both union sides of
@@ -616,14 +543,10 @@ def jaccard_verify(
         .select(F.col(id_col), _shingle_expr(text_col, shingle_mode, shingle_k).alias("sh"))
         .cache()  # read twice (a-side and b-side of the pair join)
     )
-    score = (
-        jaccard_pairs_pandas("sh_a", "sh_b")
-        if impl == "kernel"
-        # exact int counts; int/int `/` is one IEEE double division in
-        # Spark — the same rounded op the kernel performs
-        else F.expr(
-            "size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))"
-        )
+    # exact int counts; int/int `/` is one IEEE double division in Spark
+    # (and in DuckDB, so the oracle's doubles are bit-identical)
+    score = F.expr(
+        "size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))"
     )
     j = (
         pairs.join(sh.withColumnsRenamed({id_col: "a", "sh": "sh_a"}), on="a")
@@ -695,23 +618,12 @@ def shingle_hashes(text_col: str, shingle_k: int = 4, family: str = "xxhash64") 
     )
 
 
-def simhash(hash_col: str = "__shh", bits: int = 32) -> Column:
-    """SimHash over a (pre-projected) shingle-hash array column: bit b of
-    the signature = 1 iff #{hashes with bit b set} > n/2. The bit loop is
-    inside the expression (sequence+aggregate with a nested filter), so the
-    tree stays small for any bit width."""
-    return F.expr(
-        f"aggregate(sequence(0, {bits - 1}), 0L, (acc, bit) -> acc + "
-        f"if(2 * size(filter({hash_col}, h -> ((h >> bit) & 1) = 1)) > size({hash_col}), "
-        f"shiftleft(1L, bit), 0L))"
-    )
-
-
 def simhash_pandas(hash_col: str, bits: int = 32) -> Column:
-    """Vectorized SimHash: per Arrow batch, unpack each 64-bit shingle hash
-    into a bit matrix with numpy and majority-vote per bit via
-    ``np.add.reduceat`` — one pass over the data instead of ``bits``
-    interpreted filter scans."""
+    """Vectorized SimHash over a (pre-projected) shingle-hash array
+    column: bit b of the signature = 1 iff #{hashes with bit b set} > n/2.
+    Per Arrow batch, unpack each 64-bit shingle hash into a bit matrix with
+    numpy and majority-vote per bit via ``np.add.reduceat`` — one pass over
+    the data instead of ``bits`` interpreted filter scans."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -761,7 +673,6 @@ def simhash_candidates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bits: int = 32,
-    impl: str = "pandas",
     hash_family: str = "xxhash64",
     max_block_size: int | None = 5000,
 ) -> DataFrame:
@@ -787,7 +698,7 @@ def simhash_candidates(
     than the cap is dropped from pair expansion rather than exploding
     quadratically in one task. ``None`` disables."""
     agged = _simhash_block_groups(
-        df, text_col, id_col, max_hamming, bits, impl, hash_family
+        df, text_col, id_col, max_hamming, bits, hash_family
     )
     if max_block_size is not None:
         agged = agged.filter(F.size("ids") <= max_block_size)
@@ -795,19 +706,16 @@ def simhash_candidates(
 
 
 def _simhash_block_groups(
-    df, text_col, id_col, max_hamming, bits, impl, hash_family
+    df, text_col, id_col, max_hamming, bits, hash_family
 ) -> DataFrame:
     """(bidx, bval, ids) for every pigeonhole block bucket with ≥2
     members — shared by pair expansion and the hot-block census."""
     spark = df.sparkSession
     n_parts = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
-    sig_expr = (
-        simhash_pandas("__shh", bits=bits) if impl == "pandas" else simhash("__shh", bits=bits)
-    )
     sh = (
         df.repartition(n_parts, F.col(id_col))
         .select(F.col(id_col), shingle_hashes(text_col, family=hash_family).alias("__shh"))
-        .select(F.col(id_col), sig_expr.alias("sh"))
+        .select(F.col(id_col), simhash_pandas("__shh", bits=bits).alias("sh"))
     )
     # one keyed row per (doc, block); shiftrightunsigned so a sign-extended
     # 64-bit signature still yields the plain bit-slice value
@@ -854,7 +762,6 @@ def simhash_candidates_with_census(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bits: int = 32,
-    impl: str = "pandas",
     hash_family: str = "xxhash64",
     max_block_size: int = 5000,
 ) -> "tuple[DataFrame, DataFrame]":
@@ -863,7 +770,7 @@ def simhash_candidates_with_census(
     block aggregation checkpointed and shared (mirror of
     :func:`minhash_lsh_candidates_with_census`)."""
     agged = _simhash_block_groups(
-        df, text_col, id_col, max_hamming, bits, impl, hash_family
+        df, text_col, id_col, max_hamming, bits, hash_family
     ).localCheckpoint(eager=True)
     census = agged.filter(F.size("ids") > max_block_size).select(
         "bidx", "bval", F.size("ids").alias("n_ids")
@@ -1030,9 +937,16 @@ def connected_components(
         # identical contract and values (min reachable id per node)
         from samza_spark.pipeline.graph import connected_components_star
 
-        return connected_components_star(
+        star = connected_components_star(
             edges.select(F.col("s").alias("a"), F.col("d").alias("b")),
-            id_col=id_col,
+            id_col="id",
+        )
+        # star CC drops self-loops, so a node whose only edge is a
+        # self-loop is missing from its output; label it with its own id,
+        # as the converged path does, to keep the same node universe
+        return labels.select("id").join(star, on="id", how="left").select(
+            F.col("id").alias(id_col),
+            F.coalesce(F.col("component"), F.col("id")).alias("component"),
         )
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("component"))
 
@@ -1110,7 +1024,6 @@ def dedup_against_reference(
     bands: int = 16,
     shingle_k: int = 3,
     shingle_mode: str = "word",
-    impl: str = "pandas",
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Flag every ``batch`` document that duplicates the existing
@@ -1164,7 +1077,7 @@ def dedup_against_reference(
         )
     )
     banded = _lsh_banded(
-        tagged, "__text", "__sid", num_perm, bands, shingle_k, shingle_mode, impl
+        tagged, "__text", "__sid", num_perm, bands, shingle_k, shingle_mode
     )
     agged = (
         banded.groupBy("band", "bucket")
@@ -1287,14 +1200,13 @@ class CorpusDedupIndex:
         bands: int = 16,
         shingle_k: int = 3,
         shingle_mode: str = "word",
-        impl: str = "pandas",
         path: str | None = None,
         compact_every: int = 10,
     ):
         from samza_spark.tables.local import DurableLocalTable, LocalTable
 
         self.num_perm, self.bands = num_perm, bands
-        self.shingle_k, self.shingle_mode, self.impl = shingle_k, shingle_mode, impl
+        self.shingle_k, self.shingle_mode = shingle_k, shingle_mode
         fp_schema = f"__fp string, ref_id {id_type}"
         bk_schema = f"band int, bucket long, ref_id {id_type}"
         if path:
@@ -1348,7 +1260,7 @@ class CorpusDedupIndex:
                 F.col(id_col).alias("ref_id"), F.col(text_col).alias("__text")
             ),
             "__text", "ref_id",
-            self.num_perm, self.bands, self.shingle_k, self.shingle_mode, self.impl,
+            self.num_perm, self.bands, self.shingle_k, self.shingle_mode,
         ).select("band", "bucket", "ref_id").localCheckpoint(eager=True)
         self.buckets.merge_batch(banded)
         return self
@@ -1381,7 +1293,7 @@ class CorpusDedupIndex:
                 F.col(id_col).alias("__bid"), F.col(text_col).alias("__text")
             ),
             "__text", "__bid",
-            self.num_perm, self.bands, self.shingle_k, self.shingle_mode, self.impl,
+            self.num_perm, self.bands, self.shingle_k, self.shingle_mode,
         )
         joined = banded.join(self.buckets.df, on=["band", "bucket"], how="inner")
         if max_bucket_size is not None:
@@ -1917,7 +1829,6 @@ def simhash_estimate_eval(
     block_mod: int = 50,
     bits: int = 32,
     shingle_k: int = 4,
-    impl: str = "pandas",
 ) -> DataFrame:
     """SimHash estimator calibration — :func:`minhash_estimate_eval`'s
     twin for the hamming-distance family: per blocked candidate pair,
@@ -1931,19 +1842,9 @@ def simhash_estimate_eval(
     majority, XOR popcount, exact set Jaccard — replays in DuckDB SQL.
     Pairs are blocked on ``id div block_mod`` (quadratic strictly per
     block — the documented eval-tier bound). Output rows are bounded by
-    ``bits + 1``.
-
-    ``impl='pandas'`` (default) computes the per-bit majority with the
-    vectorized numpy kernel (simhash_pandas) — same VALUES as the
-    interpreted SQL fold (impl='sql', kept for environments without
-    Arrow), ~10x faster because the 32 filter scans per doc collapse to
-    one reduceat pass.
+    ``bits + 1``. The per-bit majority is the numpy kernel
+    (:func:`simhash_pandas`).
     """
-    sig = (
-        simhash_pandas("__gh", bits=bits)
-        if impl == "pandas"
-        else simhash("__gh", bits=bits)
-    )
     # materialize signatures once: the self-join would otherwise
     # recompute the gram-hash + majority subtree on BOTH sides (the
     # dominant cost — md5 per gram), doubling the job
@@ -1952,7 +1853,7 @@ def simhash_estimate_eval(
             F.col(id_col).alias("__id"),
             shingle_hashes(text_col, shingle_k, family="md5").alias("__gh"),
         )
-        .withColumn("__sig", sig)
+        .withColumn("__sig", simhash_pandas("__gh", bits=bits))
         .localCheckpoint(eager=True)
     )
     l = sh.select(

@@ -36,52 +36,18 @@ Scale design (100 TB):
   prefix unless a record is almost entirely hot). A length filter
   (t*|x| <= |y| <= |x|/t) prunes inside the join condition.
 - Verification joins the two full shingle arrays by record id (hash
-  joins on the id key); the per-pair overlap COUNT runs as an Arrow
-  batch kernel (exact integer — r10 verdict: interpreted collection
-  expressions on candidate-pair paths degrade under long-session JIT
-  profile pollution), and the similarity itself stays a single JVM-side
-  integer division over that count and the two set sizes.
+  joins on the id key); the per-pair overlap COUNT is the codegen
+  ``size(array_intersect(..))`` (exact integer — the r12 settled A/B
+  measured it faster than an Arrow batch kernel on this path), and the
+  similarity itself is a single JVM-side division over that count and
+  the two set sizes.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from samza_spark.pipeline.dedup import word_ngrams
-
-
-def overlap_count_pandas(a: str, b: str) -> Column:
-    """Exact ``size(array_intersect(a, b))`` as an Arrow batch kernel —
-    integer set-overlap per candidate pair (inputs are distinct element
-    sets, so Python set intersection counts the same elements the SQL
-    set function counts). NULL on either side → NULL.
-
-    PROJECTION-ONLY: the returned Column is ``asNondeterministic()``
-    (a pure function — the flag only stops the optimizer's double
-    evaluation under filters). Spark rejects non-deterministic
-    expressions in join conditions and sort orders, so bind it ONCE with
-    ``withColumn`` and derive jaccard/containment from the materialized
-    attribute — a second textual reference evaluates the kernel again."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def ov(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        vals = [None] * len(sa)
-        for i in range(len(sa)):
-            x, y = sa.iat[i], sb.iat[i]
-            if x is None or y is None:
-                continue
-            vals[i] = len(set(x) & set(y))
-        return pd.Series(vals, dtype="Int32")
-
-    # non-deterministic: the count feeds both the output jaccard/overlap
-    # column AND the tau filter — deterministic UDF columns referenced by
-    # a filter get cloned below it (two ArrowEvalPython nodes), and a
-    # pushable predicate over the count would drag the kernel into a join
-    # condition, which Python eval cannot sit in
-    return ov.asNondeterministic()(F.col(a), F.col(b))
 
 
 def _shingle_sets(
@@ -144,7 +110,6 @@ def similarity_join(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.6,
-    impl: str = "sql",
 ) -> DataFrame:
     """All record pairs with word-``n``-gram-set Jaccard >= ``threshold``.
 
@@ -211,21 +176,13 @@ def similarity_join(
     sb = sets_df.select(
         F.col("__id").alias("__idb"), F.col("__sh").alias("__shb")
     )
-    # bind the kernel to ONE materialized column and derive n_common /
-    # jaccard from it: the non-deterministic UDF then appears exactly once
-    # in the plan (one ArrowEvalPython), instead of once per referencing
-    # expression plus once below the threshold filter
+    # bind the overlap count to ONE column and derive n_common / jaccard
+    # from it (exact integer count, evaluated by codegen — the r12
+    # settled A/B measured the built-in faster on this verify path)
     union = (
         F.size("__sha") + F.size("__shb") - F.col("__ov")
     )
-    ov = (
-        overlap_count_pandas("__sha", "__shb")
-        if impl == "kernel"
-        # same exact integer count, evaluated by codegen — the r12
-        # settled A/B measured the built-in faster on this verify path
-        # (see jaccard_verify: the built-in is the default to beat)
-        else F.expr("size(array_intersect(__sha, __shb))").cast("int")
-    )
+    ov = F.expr("size(array_intersect(__sha, __shb))").cast("int")
     out = (
         cand.join(sa, "__ida")
         .join(sb, "__idb")
@@ -252,7 +209,6 @@ def containment_join(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.9,
-    impl: str = "sql",
 ) -> DataFrame:
     """All record pairs where either direction's shingle-set CONTAINMENT
     ``|A ∩ B| / |A|`` meets ``threshold`` — the asymmetric near-dup
@@ -303,14 +259,9 @@ def containment_join(
     )
     sa = sets_df.select(F.col("__id").alias("__ida"), F.col("__sh").alias("__sha"))
     sb = sets_df.select(F.col("__id").alias("__idb"), F.col("__sh").alias("__shb"))
-    # one materialized kernel column, three derived expressions — the
-    # non-deterministic count must appear exactly once in the plan (see
+    # one overlap-count column, three derived expressions (see
     # similarity_join)
-    ov = (
-        overlap_count_pandas("__sha", "__shb")
-        if impl == "kernel"
-        else F.expr("size(array_intersect(__sha, __shb))").cast("int")
-    )
+    ov = F.expr("size(array_intersect(__sha, __shb))").cast("int")
     out = (
         cand.join(sa, "__ida")
         .join(sb, "__idb")

@@ -264,7 +264,6 @@ def binary_near_dup(
     max_hamming: int = 3,
     bits: int = 32,
     hash_family: str = "xxhash64",
-    impl: str = "pandas",
     max_block_size: "int | None" = 5000,
 ) -> DataFrame:
     """Decode-free near-duplicate candidates over opaque BINARY payloads
@@ -295,7 +294,6 @@ def binary_near_dup(
         id_col=id_col,
         max_hamming=max_hamming,
         bits=bits,
-        impl=impl,
         hash_family=hash_family,
         max_block_size=max_block_size,
     )

@@ -543,31 +543,13 @@ def hard_negatives(
 
 
 def hyperplane_buckets(
-    df: DataFrame, vec_col: str = "embedding", n_planes: int = 8, impl: str = "pandas"
+    df: DataFrame, vec_col: str = "embedding", n_planes: int = 8
 ) -> DataFrame:
     """Assign each vector an LSH bucket: bit j = sign(<v, h_j>) with ±1
     hyperplane components derived deterministically (no stored model, no
-    RNG state — reproducible across runs/executors).
-
-    ``impl='pandas'`` (default): ONE numpy matmul per Arrow batch against
-    the md5-derived ±1 plane matrix (same constants as
-    :func:`det_planes`). ``impl='sql'`` keeps the pure-Catalyst
-    xxhash64-derived expression (no Python workers), at the cost of
-    n_planes interpreted higher-order folds per row — use it where a
-    Python-free plan matters more than per-row cost."""
-    if impl == "sql":
-        dim_component = (
-            "(case when (xxhash64(concat('pl', cast({j} as string), ':', cast(i as string))) & 1) = 1 "
-            "then 1.0 else -1.0 end)"
-        )
-        bit_terms = " + ".join(
-            f"(case when aggregate(zip_with({_as_double(vec_col)}, "
-            f"transform(sequence(0, size({vec_col}) - 1), i -> {dim_component.format(j=j)}), "
-            f"(x, h) -> x * h), cast(0.0 as double), (acc, v) -> acc + v) >= 0.0 "
-            f"then shiftleft(1L, {j}) else 0L end)"
-            for j in range(n_planes)
-        )
-        return df.withColumn("bucket", F.expr(f"({bit_terms})"))
+    RNG state — reproducible across runs/executors): ONE numpy matmul per
+    Arrow batch against the md5-derived ±1 plane matrix (same constants
+    as :func:`det_planes`)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -674,90 +656,27 @@ def hyperplane_buckets_det(
     vec_col: str = "embedding",
     n_planes: int = 8,
     dim: int = 64,
-    impl: str = "sql",
 ) -> DataFrame:
     """Deterministic-constant variant of :func:`hyperplane_buckets`: plane
     components are ±1 literals from :func:`det_planes`, the projection is a
     sequential fold (zip_with + aggregate), so a DuckDB oracle reproduces
     the bucket ids bit-for-bit. Multiplying by ±1.0 is exact; only the
     fold order of the sum matters, and both engines fold left-to-right.
-
-    ``impl='pandas'`` evaluates the SAME fold as a vectorized Arrow
-    batch kernel: per plane, products are exact (±1.0 multiply) and the
-    accumulation runs in ascending-dimension order — each element's
-    multiply-then-add is the same rounded IEEE op sequence as the
-    interpreted ``aggregate(zip_with(...))``, so the projections (and
-    hence every bucket bit) are bit-identical. ``impl='sql'`` (default)
-    keeps the pure-Catalyst expression: the r12 settled interleaved A/B
-    at sf0.1 measured the kernel ~15% SLOWER end-to-end on ann_topk
-    (0.74 s vs 0.63 s — at this corpus size the extra Python stage's
-    latency exceeds the 512 interpreted lambda evals/row it removes), so
-    per guide §4's built-in-first rule the fold stays the default; the
-    kernel is the measured escape hatch for corpora large enough that
-    per-row interpreter cost dominates stage latency. Edge semantics
-    (both impls, test-pinned): NULL vector, any NULL element, or a
-    length ≠ ``dim`` folds to a NULL comparison on every plane →
-    bucket 0; a NaN element makes every plane's fold NaN, and Spark's
-    ``NaN >= 0.0`` is TRUE (NaN sorts above all doubles) → every bit
-    set. The kernel reproduces both: a JVM-computed ``exists(isnull)``
-    flag distinguishes true NULL elements (Arrow would conflate them
-    with NaN), and bits are ``NOT (acc < 0)`` so NaN sets the bit.
+    The fold stays a pure-Catalyst expression: the r12 settled
+    interleaved A/B at sf0.1 measured an Arrow-kernel form of it ~15%
+    SLOWER end-to-end on ann_topk (0.74 s vs 0.63 s). Edge semantics
+    (test-pinned): NULL vector, any NULL element, or a length ≠ ``dim``
+    folds to a NULL comparison on every plane → bucket 0; a NaN element
+    makes every plane's fold NaN, and Spark's ``NaN >= 0.0`` is TRUE
+    (NaN sorts above all doubles) → every bit set.
     """
-    planes = det_planes(n_planes, dim)
-    if impl == "sql":
-        bit_terms = " + ".join(
-            f"(case when aggregate(zip_with({_as_double(vec_col)}, "
-            f"{_plane_array_sql(p)}, (x, h) -> x * h), cast(0.0 as double), "
-            f"(acc, v) -> acc + v) >= 0.0 then shiftleft(1L, {j}) else 0L end)"
-            for j, p in enumerate(planes)
-        )
-        return df.withColumn("bucket", F.expr(f"({bit_terms})"))
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim), ±1.0
-    npl, d = int(n_planes), int(dim)
-
-    @pandas_udf("long")
-    def bucket(vs: pd.Series, has_null: pd.Series) -> pd.Series:
-        out = np.zeros(len(vs), dtype=np.int64)
-        idx = []
-        for i in range(len(vs)):
-            v = vs.iat[i]
-            # SQL fold: a NULL vector, any NULL element (the JVM-computed
-            # has_null flag — Arrow would deliver NULL elements as NaN,
-            # which the SQL fold treats differently), or zip_with NULL
-            # padding (length mismatch) makes every plane's acc NULL ->
-            # CASE not taken -> bit 0
-            if v is None or len(v) != d or bool(has_null.iat[i]):
-                continue
-            idx.append(i)
-        if idx:
-            X = np.empty((len(idx), d), dtype=np.float64)
-            for r, i in enumerate(idx):
-                X[r] = np.asarray(vs.iat[i], dtype=np.float64)
-            acc = np.zeros((len(idx), npl), dtype=np.float64)
-            for j in range(d):
-                # ascending-dimension multiply-then-add: same rounded
-                # IEEE ops in the same order as the interpreted fold
-                acc += X[:, j : j + 1] * P[:, j][None, :]
-            # Spark's NaN >= 0.0 is TRUE (NaN sorts above all doubles):
-            # NOT (acc < 0) reproduces that; for finite acc it equals
-            # acc >= 0
-            bits = ~(acc < 0.0)
-            weights = (np.int64(1) << np.arange(npl, dtype=np.int64))
-            out[idx] = bits.astype(np.int64) @ weights
-        return pd.Series(out)
-
-    return df.withColumn(
-        "bucket",
-        bucket(
-            F.col(vec_col),
-            F.coalesce(
-                F.expr(f"exists({vec_col}, x -> isnull(x))"), F.lit(False)
-            ),
-        ),
+    bit_terms = " + ".join(
+        f"(case when aggregate(zip_with({_as_double(vec_col)}, "
+        f"{_plane_array_sql(p)}, (x, h) -> x * h), cast(0.0 as double), "
+        f"(acc, v) -> acc + v) >= 0.0 then shiftleft(1L, {j}) else 0L end)"
+        for j, p in enumerate(det_planes(n_planes, dim))
     )
+    return df.withColumn("bucket", F.expr(f"({bit_terms})"))
 
 
 def ann_topk_exact(

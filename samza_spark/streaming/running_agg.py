@@ -1,109 +1,33 @@
-"""Per-key running aggregates on the modern stateful API
-(``transformWithStateInPandas``, Spark 4).
+"""Per-key stateful streaming aggregates on ``applyInPandasWithState``.
 
 Samza analog: a task accumulating per-key totals in its KeyValueStore
 (KeyValueStore.java:40 get/put) and emitting the updated value per message
 — the canonical low-level stateful pattern (e.g. the reference's join/
-checker correctness job). Here the state lives in Spark's state store via
-a StatefulProcessor ValueState; output is one row per (key, batch) with
-the running count/sum after that batch.
-
-This module is also the engine's proving ground for the
-StatefulProcessor API (vs. the applyInPandasWithState path used by
-triggered windows — see NOTES.md for that API's timeout caveats).
+checker correctness job). Here the state lives in Spark's state store as
+one per-key state tuple; output is one row per (key, batch) with the
+state after that batch.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class _RunningAgg(StatefulProcessor):
-    def __init__(self, value_col: str | None):
-        self.value_col = value_col
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("acc", "n bigint, total double")
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        n, total = 0, 0.0
-        if self.state.exists():
-            n, total = self.state.get()
-        for pdf in rows:
-            n += len(pdf)
-            if self.value_col is not None:
-                total += float(pdf[self.value_col].sum())
-        self.state.update((n, total))
-        yield pd.DataFrame(
-            {"key": [key[0]], "running_n": [n], "running_total": [total]}
-        )
-
-    def close(self) -> None:
-        pass
 
 
 def running_aggregate(
     stream,
     key_col: str,
     value_col: str | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """Running per-key (count, sum) emitted after every micro-batch that
-    touches the key. State persists across batches in the state store.
-
-    ``impl``: 'tws' = transformWithStateInPandas (Spark 4 StatefulProcessor
-    — needs google.protobuf for its state-server protocol), 'apws' =
-    applyInPandasWithState (no extra deps), 'auto' = tws when protobuf is
-    importable, else apws. Both emit the same (key, running_n,
-    running_total) contract."""
-    df = getattr(stream, "df", stream)
-    if impl == "auto":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-
-            impl = "tws"
-        except ImportError:
-            impl = "apws"
-    if impl == "apws":
-        return _running_aggregate_apws(df, key_col, value_col)
-    try:  # the TWS state protocol needs protobuf, absent from some images
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the google.protobuf package "
-            "(its state-server protocol is protobuf-encoded), which is not "
-            "installed in this environment — use impl='apws' (same API on "
-            "applyInPandasWithState) instead"
-        ) from exc
-    return (
-        df.groupBy(F.col(key_col))
-        .transformWithStateInPandas(
-            _RunningAgg(value_col),
-            outputStructType="key string, running_n bigint, running_total double",
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
-def _running_aggregate_apws(
-    df: DataFrame, key_col: str, value_col: str | None
-) -> DataFrame:
-    """The same running (n, total) per key on ``applyInPandasWithState`` —
-    dependency-free (no protobuf): per-key ValueState is a single
+    touches the key, as ``(key, running_n, running_total)``. State
+    persists across batches in the state store: per-key state is a single
     (n, total) tuple, exactly Samza's KeyValueStore get/put accumulation
     (KeyValueStore.java:40)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    value_col_ = value_col
+    df = getattr(stream, "df", stream)
 
     def fn(key, pdf_iter, state: GroupState):
         n, total = state.get if state.exists else (0, 0.0)
@@ -113,8 +37,8 @@ def _running_aggregate_apws(
                 continue
             got = True
             n += len(pdf)
-            if value_col_ is not None:
-                total += float(pdf[value_col_].sum())
+            if value_col is not None:
+                total += float(pdf[value_col].sum())
         if got:
             state.update((n, float(total)))
             yield pd.DataFrame(

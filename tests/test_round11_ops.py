@@ -245,27 +245,6 @@ class TestPairwiseKernelsBitExact:
         for r in got:
             assert r["k"] == r["h"], (r["i"], r["k"], r["h"])
 
-    def test_jaccard_kernel_equals_set_expressions(self, spark):
-        from samza_spark.pipeline.dedup import jaccard_pairs_pandas
-
-        rows = [
-            Row(i=0, a=["x", "y", "z"], b=["y", "z", "w"]),
-            Row(i=1, a=["x"], b=["x"]),
-            Row(i=2, a=["x", "x", "y"], b=["x"]),  # dup collapse
-            Row(i=3, a=["q"], b=["r"]),
-        ]
-        df = spark.createDataFrame(rows)
-        got = df.select(
-            "i",
-            jaccard_pairs_pandas("a", "b").alias("k"),
-            (
-                F.size(F.array_intersect("a", "b"))
-                / F.size(F.array_union("a", "b"))
-            ).alias("h"),
-        ).collect()
-        for r in got:
-            assert r["k"] == r["h"], (r["i"], r["k"], r["h"])
-
     def test_jaccard_ppm_kernel_equals_div_expression(self, spark):
         from samza_spark.pipeline.dedup import jaccard_ppm_pandas
 
@@ -417,67 +396,9 @@ class TestConnectedComponentsInlineConvergence:
 
 
 class TestKernelSingleEvaluation:
-    """The pair kernels are marked non-deterministic so the optimizer
-    cannot clone them below threshold filters (guide-class duplicated
-    ArrowEvalPython: filter copy + projection copy = every candidate
-    pair scored twice). Pin: exactly ONE ArrowEvalPython per kernel in
-    the verify plans, and values unchanged."""
-
-    def _plan(self, df) -> str:
-        from samza_spark.advisor import explain_formatted
-
-        return explain_formatted(df)
-
-    @staticmethod
-    def _n_nodes(plan: str, op: str) -> int:
-        # formatted explain prints every node twice (tree line + the
-        # numbered "(N) Op" detail header) — count the detail headers
-        import re
-
-        return len(re.findall(rf"^\(\d+\) {op}", plan, re.M))
-
-    def test_jaccard_verify_single_kernel_node(self, spark):
-        from samza_spark.pipeline import dedup
-
-        docs = spark.createDataFrame(
-            [(i, f"tok{i} alpha beta gamma delta common words here")
-             for i in range(8)],
-            "doc_id long, text string",
-        )
-        pairs = spark.createDataFrame(
-            [(1, 2), (3, 4)], "a long, b long"
-        )
-        # impl pinned to the kernel path: the single-evaluation property
-        # is a property of the ND-marked kernel, independent of which
-        # impl a given call site defaults to (r12 A/B decides defaults)
-        plan = self._plan(
-            dedup.jaccard_verify(docs, pairs, threshold=0.5, impl="kernel")
-        )
-        assert self._n_nodes(plan, "ArrowEvalPython") == 1, plan
-
-    def test_similarity_join_single_kernel_node(self, spark):
-        from samza_spark.pipeline import linkage
-
-        docs = spark.createDataFrame(
-            [(i, "the quick brown fox jumps over the lazy dog " + "x" * (i % 3))
-             for i in range(6)],
-            "doc_id long, text string",
-        )
-        out = linkage.similarity_join(docs, threshold=0.5, impl="kernel")
-        plan = self._plan(out)
-        # the operator persists its output, and explain of a cached frame
-        # prints the cached plan more than once — so count STACKED kernel
-        # nodes (two adjacent ArrowEvalPython tree lines, the signature of
-        # the filter-clone duplication) rather than total occurrences
-        lines = [
-            ln.strip().lstrip("+-:* ").split(" ")[0]
-            for ln in plan.splitlines()
-            if "ArrowEvalPython" in ln or "Filter" in ln
-        ]
-        for prev, cur in zip(lines, lines[1:]):
-            assert not (
-                prev == "ArrowEvalPython" and cur == "ArrowEvalPython"
-            ), plan
+    """jaccard_verify scores pairs with the codegen set expressions; pin
+    its values against the same expressions evaluated directly over the
+    char-5-gram shingle arrays."""
 
     def test_jaccard_verify_values_unchanged_by_nd_marking(self, spark):
         from samza_spark.pipeline import dedup
@@ -496,8 +417,8 @@ class TestKernelSingleEvaluation:
             (r.a, r.b): r.jaccard
             for r in dedup.jaccard_verify(docs, pairs, threshold=0.0).collect()
         }
-        # reference: the SQL set expressions the kernel replaced, over the
-        # same char-5-gram shingle arrays
+        # reference: the SQL set expressions over the same char-5-gram
+        # shingle arrays
         from samza_spark.pipeline.dedup import _shingle_expr
 
         sh = docs.select(

@@ -197,6 +197,9 @@ class TestBinaryNearDup:
         assert (1, 3) not in pairs and (2, 3) not in pairs
 
     def test_md5_family_matches_pandas_impl(self, spark):
+        """md5-family candidates equal the brute-force hamming join over
+        the same hex-shingle SimHash signatures (recall is exactly 1)."""
+        from samza_spark.pipeline.dedup import shingle_hashes, simhash_pandas
         from samza_spark.pipeline.multimodal import binary_near_dup
 
         rows = [
@@ -204,15 +207,28 @@ class TestBinaryNearDup:
             for i in range(12)
         ]
         df = spark.createDataFrame(rows)
-        a = sorted(
+        got = sorted(
             (r.a, r.b, r.hamming)
-            for r in binary_near_dup(df, hash_family="md5", impl="sql").collect()
+            for r in binary_near_dup(df, hash_family="md5").collect()
         )
-        b = sorted(
-            (r.a, r.b, r.hamming)
-            for r in binary_near_dup(df, hash_family="md5", impl="pandas").collect()
+        sig = (
+            df.select("doc_id", F.hex("content").alias("__hx"))
+            .select("doc_id", shingle_hashes("__hx", family="md5").alias("__shh"))
+            .select("doc_id", simhash_pandas("__shh").alias("sh"))
         )
-        assert a == b and len(a) >= 1
+        l, r = sig.alias("l"), sig.alias("r")
+        want = sorted(
+            tuple(row)
+            for row in l.join(r, F.col("l.doc_id") < F.col("r.doc_id"))
+            .select(
+                F.col("l.doc_id").alias("a"),
+                F.col("r.doc_id").alias("b"),
+                F.expr("bit_count(l.sh ^ r.sh)").alias("hamming"),
+            )
+            .filter("hamming <= 3")
+            .collect()
+        )
+        assert got == want and len(got) >= 1
 
 
 # -- token-bucket rate limiting ----------------------------------------------

@@ -165,26 +165,10 @@ def test_window_close_fires_under_sustained_traffic(spark):
     assert all(r.n > 0 for r in finals)
 
 
-def test_running_aggregate_tws_gated_without_protobuf(spark):
-    """transformWithStateInPandas needs google.protobuf (absent here); the
-    explicit impl='tws' must fail with guidance, not a worker crash."""
-    from samza_spark.streaming.running_agg import running_aggregate
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        pytest.skip("protobuf available — gate not applicable")
-    except ImportError:
-        pass
-    df = spark.readStream.format("rate").load()
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        running_aggregate(df, "value", impl="tws")
-
-
 def test_running_aggregate_apws_across_batches(spark, tmp_path):
     """Per-key running (n, total) accumulates across >=3 micro-batches on
-    the protobuf-free applyInPandasWithState implementation (KeyValueStore
-    get/put accumulation, KeyValueStore.java:40); impl='auto' selects it
-    when protobuf is absent."""
+    applyInPandasWithState (KeyValueStore get/put accumulation,
+    KeyValueStore.java:40)."""
     from samza_spark.streaming.running_agg import running_aggregate
 
     d = tmp_path / "run_agg"

@@ -5,8 +5,11 @@ Times ONLY the computation of named queries — every column of every row
 is computed and discarded via ``format("noop")`` — with bench.py's
 hygiene (idle-gate check, clearCache + driver gc per sample, median of N
 fresh samples, one untimed warm-up pass). Used for before/after evidence
-of single-operator optimizations; bench.py's ``.count()`` timing stays
-the cross-round comparable artifact.
+of single-operator optimizations and settled re-runs of bench rows;
+bench.py's ``.count()`` timing stays the cross-round comparable
+artifact. The JSON carries the start/end load averages and bench.py's
+single-thread ``cpu_calib_ms`` stamp, so a result is compared only
+against a like host.
 
 Usage: python tools/isolate_time.py name [name ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
@@ -28,6 +31,15 @@ import time
 sys.path.insert(0, ".")
 
 
+def _cpu_calib_ms() -> float:
+    """bench.py's single-thread calibration: a fixed pure-Python loop."""
+    t0 = time.perf_counter()
+    s = 0
+    for i in range(5_000_000):
+        s += i
+    return round((time.perf_counter() - t0) * 1000, 1)
+
+
 def main() -> int:
     names = sys.argv[1:]
     if not names:
@@ -36,8 +48,8 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
+    la = os.getloadavg()
     if not os.environ.get("SPARK_GRAFT_IDLE_SKIP"):
-        la = os.getloadavg()
         if la[0] > 1.5 or la[1] > 1.5:
             print(
                 f"ERROR box not idle: load {la[0]:.2f}/{la[1]:.2f} — "
@@ -89,8 +101,13 @@ def main() -> int:
             "samples": [round(s, 3) for s in samples],
         }
         print(f"# {name}: {results[name]}", file=sys.stderr)
-    print(json.dumps({"sf_dir": sf_dir, "cpus": cpus, "noop_sink": True,
-                      "extra_conf": extra_conf, "results": results}))
+    print(json.dumps({
+        "sf_dir": sf_dir, "cpus": cpus, "noop_sink": True,
+        "extra_conf": extra_conf, "repeats": repeats, "results": results,
+        "cpu_calib_ms": min(_cpu_calib_ms() for _ in range(3)),
+        "load_avg_start": [round(x, 2) for x in la],
+        "load_avg_end": [round(x, 2) for x in os.getloadavg()],
+    }))
     return 0
 
 
