@@ -827,10 +827,11 @@ def main() -> None:
         from samza_spark.sources.log_datasource import log_sink
 
         _rep_seq = [0]
+        sink_root = tempfile.mkdtemp(prefix="bench_logsink_")
 
         def start_log_sink():
             _rep_seq[0] += 1
-            dst = tempfile.mkdtemp(prefix=f"bench_logsink_{_rep_seq[0]}_")
+            dst = os.path.join(sink_root, str(_rep_seq[0]))
             return (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", max(1, replicas // 2))
@@ -847,9 +848,12 @@ def main() -> None:
                 .start()
             )
 
-        secs = run_sustained(
-            "stream_sustained_log_sink_1m", start_log_sink, reps=repeats
-        )
+        try:
+            secs = run_sustained(
+                "stream_sustained_log_sink_1m", start_log_sink, reps=repeats
+            )
+        finally:
+            shutil.rmtree(sink_root, ignore_errors=True)
         streaming["stream_sustained_log_sink_msgs_per_sec"] = round(
             n_replay / secs
         )
@@ -1072,26 +1076,32 @@ def main() -> None:
     }
 
     # calib-normalized comparison against the newest prior driver artifact
-    # (VERDICT r7 next #3): for each shared streaming rate, the prior
-    # median scaled by calib_prev/calib_now is this host's EXPECTATION;
-    # only deviations from THAT are genuine deltas. Full table goes to
+    # of the same sf and cpus (VERDICT r7 next #3): for each shared
+    # streaming rate, the prior median scaled by calib_prev/calib_now is
+    # this host's EXPECTATION; only deviations from THAT are genuine
+    # deltas. Another scale or core count is a different workload, so
+    # without a like artifact nothing is compared. Full table goes to
     # BENCH_FULL.json; stdout carries ratio + >=15% flags only.
-    def _prev_artifact(repo_dir):
+    def _prev_artifact(repo_dir, sf, cpus):
         import glob
 
         for p in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")))[::-1]:
             try:
-                tail = json.load(open(p)).get("tail", "")
+                art = json.load(open(p))
+                tail = art.get("tail", "")
                 i = tail.rfind('{"metric"')
                 obj = json.loads(tail[i:]) if i >= 0 else None
-                if obj and obj.get("cpu_calib_ms") and obj.get("streaming"):
+                if (
+                    obj and obj.get("cpu_calib_ms") and obj.get("streaming")
+                    and art.get("cpus") == cpus and art.get("sf") == sf
+                ):
                     return os.path.basename(p), obj
             except (OSError, ValueError):
                 continue
         return None, None
 
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prev_name, prev = _prev_artifact(repo_dir)
+    prev_name, prev = _prev_artifact(repo_dir, meta["sf"], cpus)
     norm_full, norm_flags = None, None
     if prev:
         # >1 means this host is faster than the prior artifact's host

@@ -326,6 +326,17 @@ def lsh_band_buckets_pandas(
     return buckets(F.col(word_hash_col))
 
 
+def spread_width(spark) -> int:
+    """Partition count for the repartition that spreads a CPU-bound
+    per-document stage over the cluster: one partition per core
+    (``defaultParallelism``), but never wider than the session's
+    ``spark.sql.shuffle.partitions``. Read from the session alone — asking
+    a DataFrame for its partition count (``df.rdd``) runs the map stage
+    of any shuffle upstream of it while the plan is still being built."""
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return min(spark.sparkContext.defaultParallelism, shuffle)
+
+
 def _lsh_banded(
     df: DataFrame,
     text_col: str,
@@ -342,11 +353,12 @@ def _lsh_banded(
     rows_per_band = num_perm // bands
     # Spread the (CPU-bound) signature computation across all cores: a small
     # parquet arrives as one partition, which would serialize the whole
-    # pipeline onto a single thread. Word n-grams (default) give ~6x fewer
-    # shingles than char 5-grams at equivalent dedup quality for natural-
-    # language docs — the dominant cost is per-shingle hashing.
-    spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
+    # pipeline onto a single thread. The width comes from the session
+    # (spread_width), so building this plan launches no job. Word n-grams
+    # (default) give ~6x fewer shingles than char 5-grams at equivalent
+    # dedup quality for natural-language docs — the dominant cost is
+    # per-shingle hashing.
+    n_parts = spread_width(df.sparkSession)
     if shingle_mode == "word":
         # fast path: hash words once JVM-side, everything else fused in
         # one vectorized UDF emitting band buckets directly
@@ -521,8 +533,7 @@ def jaccard_verify(
     kernel on this verify path (minhash_pairs shape: 3.60 s vs 3.86 s
     median; direct jaccard_verify rerun: 2.13 s vs 2.31 s) — at
     bench-scale candidate volume a Python stage is pure latency."""
-    spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
+    n_parts = spread_width(df.sparkSession)
     # the pair table is referenced three times below (both union sides of
     # cand_ids + the verify join); without a persist the caller's whole
     # candidate-generation subtree (LSH banding, prefix filtering, ...) is
@@ -710,8 +721,7 @@ def _simhash_block_groups(
 ) -> DataFrame:
     """(bidx, bval, ids) for every pigeonhole block bucket with ≥2
     members — shared by pair expansion and the hot-block census."""
-    spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions())
+    n_parts = spread_width(df.sparkSession)
     sh = (
         df.repartition(n_parts, F.col(id_col))
         .select(F.col(id_col), shingle_hashes(text_col, family=hash_family).alias("__shh"))
@@ -937,16 +947,9 @@ def connected_components(
         # identical contract and values (min reachable id per node)
         from samza_spark.pipeline.graph import connected_components_star
 
-        star = connected_components_star(
+        return connected_components_star(
             edges.select(F.col("s").alias("a"), F.col("d").alias("b")),
-            id_col="id",
-        )
-        # star CC drops self-loops, so a node whose only edge is a
-        # self-loop is missing from its output; label it with its own id,
-        # as the converged path does, to keep the same node universe
-        return labels.select("id").join(star, on="id", how="left").select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("id")).alias("component"),
+            id_col=id_col,
         )
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("component"))
 

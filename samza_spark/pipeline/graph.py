@@ -281,12 +281,15 @@ def connected_components_star(
     shortening covers any realistic graph).
 
     Returns (id_col, component) — identical contract and values to
-    ``dedup.connected_components``.
+    ``dedup.connected_components``, including a node whose only edge is a
+    self-loop: it is its own component. Self-loops are kept for that
+    reason; each round leaves one on every node that is its own
+    neighbourhood minimum, so at the fixed point each component's center
+    carries one and an isolated self-loop node never drops out.
     """
     sym = (
         pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionByName(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -305,16 +308,19 @@ def connected_components_star(
             .unionByName(
                 mins.select(F.col("u").alias("a"), F.col("m").alias("b"))
             )
-            .where(F.col("a") != F.col("b"))
             .select(
                 F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y")
             )
             .distinct()
         )
-        # re-symmetrize for the next round's per-node neighborhoods
+        # re-symmetrize for the next round's per-node neighborhoods (a
+        # self-loop is its own mirror, so it is emitted once)
         return (
             out.select(F.col("x").alias("u"), F.col("y").alias("v"))
-            .unionByName(out.select(F.col("y").alias("u"), F.col("x").alias("v")))
+            .unionByName(
+                out.where(F.col("x") != F.col("y"))
+                .select(F.col("y").alias("u"), F.col("x").alias("v"))
+            )
             .localCheckpoint(eager=True)
         )
 

@@ -47,7 +47,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from samza_spark.pipeline.dedup import word_ngrams
+from samza_spark.pipeline.dedup import spread_width, word_ngrams
 
 
 def _shingle_sets(
@@ -57,13 +57,11 @@ def _shingle_sets(
     size. Shingling is the dominant cost (higher-order array expressions
     are interpreted, not codegen'd), so spread it across the cluster
     first — a single input file otherwise pins the whole expression run
-    to one task (same repartition-before-shingling as dedup.lsh_banded)."""
-    spark = df.sparkSession
-    n_parts = max(
-        spark.sparkContext.defaultParallelism, df.rdd.getNumPartitions()
-    )
+    to one task (same repartition-before-shingling as dedup._lsh_banded).
+    The width is ``dedup.spread_width`` of the session, so building the
+    plan launches no job."""
     return (
-        df.repartition(n_parts, F.col(id_col))
+        df.repartition(spread_width(df.sparkSession), F.col(id_col))
         .select(
             F.col(id_col).alias("__id"),
             word_ngrams(text_col, n).alias("__sh"),

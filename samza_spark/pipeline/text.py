@@ -191,27 +191,37 @@ def quality_micro(text_col: str = "text") -> Column:
 def lang_id(text: Column) -> Column:
     """Stopword-marker language ID: count marker hits per language on the
     lowercased text, pick the argmax (ties -> lexicographic language order,
-    no hits -> 'und'). Deterministic and SQL-expressible."""
-    lowered = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    scores = [
-        (
-            lang,
-            sum(
-                (
-                    F.size(F.split(lowered, F.lit(marker).cast("string"), -1)) - 1
-                    for marker in markers
-                ),
-                start=F.lit(0),
-            ),
+    no hits -> 'und'). Deterministic and SQL-expressible.
+
+    Each marker count and the lowercasing are evaluated once per row: the
+    padded lowercase text is bound once (the lambda of a one-element
+    ``transform``), the per-language hit counts are built once as an array
+    of (lang, hits) structs, and one ``aggregate`` folds that array to the
+    argmax. Languages are folded in sorted order with a strict ``>``, so
+    the first of tied languages wins, and the ('und', 0) seed survives a
+    document with no hits (or a NULL text, whose counts are NULL)."""
+
+    def argmax(lowered: Column) -> Column:
+        hits = F.array(
+            *[
+                F.struct(
+                    F.lit(lang).alias("lang"),
+                    sum(
+                        (F.size(F.split(lowered, marker, -1)) - 1 for marker in markers),
+                        start=F.lit(0),
+                    ).alias("hits"),
+                )
+                for lang, markers in sorted(LANG_MARKERS.items())
+            ]
         )
-        for lang, markers in sorted(LANG_MARKERS.items())
-    ]
-    best_score = F.greatest(*[s for _, s in scores])
-    result = F.lit("und")
-    # reversed so earlier (lexicographically smaller) languages win ties
-    for lang, s in reversed(scores):
-        result = F.when((s == best_score) & (s > 0), F.lit(lang)).otherwise(result)
-    return result
+        return F.aggregate(
+            hits,
+            F.struct(F.lit("und").alias("lang"), F.lit(0).alias("hits")),
+            lambda best, x: F.when(x["hits"] > best["hits"], x).otherwise(best),
+        )["lang"]
+
+    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
+    return F.transform(F.array(padded), argmax)[0]
 
 
 def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -383,6 +383,8 @@ def test_star_cc_matches_propagation_on_random_graph(spark):
             for _ in range(70)
         }
     )
+    # a node whose only edge is a self-loop is its own component in both
+    pairs.append((99, 99))
     df = spark.createDataFrame(pairs, "a long, b long")
     star = {
         r["doc_id"]: r["component"]

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from samza_spark.pipeline import dedup, similarity, text
+from samza_spark.pipeline import dedup, linkage, similarity, text
 from samza_spark.pipeline.multimodal import attach_meta, decode_image, sample_audio_frames
 
 
@@ -46,6 +46,34 @@ def test_minhash_dedup_drops_near_dups(spark, doc_df):
     out = dedup.minhash_dedup(doc_df, threshold=0.7, num_perm=32, bands=16)
     ids = {r.doc_id for r in out.select("doc_id").collect()}
     assert 0 in ids and 101 not in ids
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda df: dedup.minhash_dedup(df, num_perm=32, bands=16, on_capped="ignore"),
+        lambda df: dedup.simhash_candidates(df, max_hamming=2),
+        # the shingling stage of linkage.similarity_join/containment_join,
+        # which then materialize their pair output on purpose
+        lambda df: linkage._shingle_sets(df, "text", "doc_id", 3),
+    ],
+    ids=["minhash_dedup", "simhash_candidates", "shingle_sets"],
+)
+def test_dedup_and_linkage_build_launches_no_job(spark, doc_df, build):
+    # exact_dedup's aggregate puts a shuffle upstream: asking its output for
+    # a partition count (df.rdd) would run that map stage while the plan is
+    # built, and the action would run it again. A fresh input per operator,
+    # since a DataFrame answers df.rdd from its first call
+    sc = spark.sparkContext
+    shuffled = dedup.exact_dedup(doc_df)
+    sc.setJobGroup("plan_build", "plan build")
+    try:
+        build(shuffled)
+        # job events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("plan_build") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_simhash_near_dups(spark, doc_df):
@@ -469,6 +497,7 @@ def test_text_profile_metrics(spark):
             (1, "the cat and the dog sat in the house"),
             (2, "der Hund und die Katze sind nicht da"),
             (3, ""),
+            (4, "the der"),
         ],
         "doc_id long, text string",
     )
@@ -476,6 +505,8 @@ def test_text_profile_metrics(spark):
     assert out[1].n_tokens == 9 and out[1].lang_pred == "en"
     assert out[2].lang_pred == "de"
     assert out[3].n_tokens == 0 and out[3].lang_pred == "und"
+    # one 'en' hit and one 'de' hit: the tie goes to the first language
+    assert out[4].lang_pred == "de"
     assert 0.0 <= out[1].quality <= 1.0
     assert len(out[1].fp) == 32  # md5 hex
 
