@@ -194,3 +194,56 @@ def test_running_aggregate_apws_across_batches(spark, tmp_path):
         ("a", 1, 1.0), ("a", 2, 3.0), ("a", 3, 6.0),
         ("b", 1, 10.0), ("b", 2, 30.0), ("b", 3, 60.0),
     ]
+
+
+def test_streaming_final_panes_match_replay_on_all_ops(spark, tmp_path):
+    """Every window-close pane of the stream equals the replay's on the same
+    rows, for count, sum, min, max and avg: 2 keys x 2 six-second tumbling
+    windows, each window's rows split over 2 micro-batches, ACCUMULATING.
+    A window closes 6 s after its first arrival, so batch 2 must land
+    within that span; it normally follows batch 1 in under a second."""
+    import os
+
+    from samza_spark.streaming.stateful import triggered_window_batch
+
+    schema = "k string, t timestamp, v double"
+    # per key and window, 2 rows in each batch; values are exact in binary
+    batches = [
+        [(k, ts(0, s), float(s) * m) for k, m in (("a", 1.5), ("b", -0.25))
+         for s in (off, off + 1, 6 + off, 7 + off)]
+        for off in (0, 2)
+    ]
+    for i, rows in enumerate(batches):
+        d = tmp_path / f"b{i}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(d))
+        for f in d.iterdir():  # distinct mtimes -> deterministic batch order
+            os.utime(f, (1_700_000_000 + i * 10,) * 2)
+    spec = (
+        Windows.keyed_tumbling_window("k", "t", "6 seconds")
+        .set_early_trigger(Triggers.count(3))
+        .set_accumulation_mode(AccumulationMode.ACCUMULATING)
+    )
+    aggs = [
+        AggSpec("n", "count"), AggSpec("s", "sum", "v"), AggSpec("lo", "min", "v"),
+        AggSpec("hi", "max", "v"), AggSpec("a", "avg", "v"),
+    ]
+    src = FileSource(f"{tmp_path}/*", schema=schema, max_files_per_trigger=1)
+    sink = MemorySink("all_ops_out", output_mode="append")
+    q = src.read_stream(spark).window(spec, *aggs).send_to(sink)
+    ok = await_condition(
+        q, lambda: sum(r.is_final for r in sink.collect(spark)) >= 4, timeout_s=90
+    )
+    q.stop()
+    q.awaitTermination(30)
+    assert ok, f"expected 4 final panes, got {sink.collect(spark)}"
+
+    def finals(rows):
+        return sorted(
+            (r.k, r.window_start, r.window_end, r.n, r.s, r.lo, r.hi, r.a, r.pane_seq)
+            for r in rows if r.is_final
+        )
+
+    replay = triggered_window_batch(
+        spark.createDataFrame(batches[0] + batches[1], schema), spec, aggs
+    )
+    assert finals(sink.collect(spark)) == finals(replay.collect())
