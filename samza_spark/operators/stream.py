@@ -187,7 +187,8 @@ class MessageStream:
         """Window + aggregate. Native Catalyst path when no early triggers /
         DISCARDING mode are requested; otherwise the stateful operator
         (samza_spark.streaming.stateful) implements Samza's trigger
-        semantics (WindowOperatorImpl.java:253-297)."""
+        semantics (WindowOperatorImpl.java:253-297). That path closes
+        windows on processing time and ignores ``spec.watermark``."""
         agg_cols = list(aggs) + [a.alias(n) for n, a in aliased_aggs.items()]
         if not agg_cols:
             agg_cols = [F.count(F.lit(1)).alias("count")]

@@ -107,6 +107,10 @@ class WindowSpec:
         return self
 
     def with_watermark(self, delay: str) -> "WindowSpec":
+        """Event-time lateness bound for the native window path. The
+        triggered path (early triggers or DISCARDING) closes windows on
+        processing time, as Samza does, and ignores this delay: a late row
+        folds into a new window instead of being dropped."""
         self.watermark = delay
         return self
 

@@ -19,6 +19,11 @@ Cross-engine determinism rules used throughout (see each oracle):
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from samza_spark.catalog import load_table
@@ -30,6 +35,21 @@ from samza_spark.sql.runner import SqlApplication
 from samza_spark.streaming.stateful import AggSpec, triggered_window_batch
 from samza_spark.tables.local import LocalTable
 from samza_spark.tables.remote import RemoteTable, RateLimiter
+
+@functools.cache
+def _roundtrip_root() -> str:
+    """This process's one root for round-trip files, removed at exit."""
+    root = tempfile.mkdtemp(prefix="ss_roundtrip_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _roundtrip_dir(prefix: str) -> str:
+    """A fresh directory for a round-trip query's write-then-read, under
+    :func:`_roundtrip_root`: the returned DataFrame reads its files lazily,
+    so they must outlive the call."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_roundtrip_root())
+
 
 # DuckDB spelling of the normalized-text expression (must mirror
 # samza_spark.pipeline.text.normalized — note the 'g' flag).
@@ -848,12 +868,10 @@ def q_avro_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     every byte of the round trip is value-checked
     (samza-hdfs AvroFileHdfsReader.java:41-74 / AvroDataFileHdfsWriter
     parity path)."""
-    import tempfile
-
     from samza_spark.formats.avro_py import read_avro, write_avro
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text", "lang", "n_chars")
-    path = tempfile.mkdtemp(prefix="ss_avro_q_")
+    path = _roundtrip_dir("ss_avro_q_")
     write_avro(docs, path)
     return read_avro(spark, path).select(
         "doc_id",
@@ -8550,12 +8568,10 @@ def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     embedded newlines and quotes in text — written with full quoting and
     read back with multiLine + explicit schema. Oracle reads the
     original table, so every byte of quoting/escaping is value-checked."""
-    import tempfile
-
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    path = tempfile.mkdtemp(prefix="ss_csv_q_")
+    path = _roundtrip_dir("ss_csv_q_")
     docs.write.mode("overwrite").options(
         header=True, quoteAll=True, escape='"'
     ).csv(path)
@@ -8585,12 +8601,10 @@ def q_jsonl_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     reference's HDFS system consumes): schema-pinned read-back; oracle
     reads the original table — escaping of newlines/quotes/unicode is
     value-checked byte-for-byte."""
-    import tempfile
-
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    path = tempfile.mkdtemp(prefix="ss_jsonl_q_")
+    path = _roundtrip_dir("ss_jsonl_q_")
     docs.write.mode("overwrite").json(path)
     back = spark.read.schema(
         "doc_id long, text string, lang string, n_chars long"
@@ -9078,10 +9092,8 @@ def q_schema_evolution_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     through mergeSchema — old rows surface NULL for the added column,
     new rows keep it; the aggregate proves the merged read loses nothing.
     Oracle replays the expected union from the source table."""
-    import tempfile
-
     docs = load_table(spark, sf, "documents")
-    path = tempfile.mkdtemp(prefix="ss_schevo_q_")
+    path = _roundtrip_dir("ss_schevo_q_")
     v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "lang", "n_chars"
     )
@@ -10036,12 +10048,10 @@ def q_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     Spark's native ORC writer/reader stands in; schema and values are
     checked against the original table via the oracle, so type mapping
     (longs, strings, nested lengths) is verified end-to-end."""
-    import tempfile
-
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    path = tempfile.mkdtemp(prefix="ss_orc_q_")
+    path = _roundtrip_dir("ss_orc_q_")
     docs.write.mode("overwrite").orc(path)
     back = spark.read.schema(
         "doc_id long, text string, lang string, n_chars long"
@@ -11540,14 +11550,12 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     file per partition written via mapInPandas, read back one task per
     file. Oracle reads the original table, so every byte of the utf-8 /
     int64 feature encoding is value-checked."""
-    import tempfile
-
     from samza_spark.formats.tfrecord import read_tfrecords, write_tfrecords
 
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    path = tempfile.mkdtemp(prefix="ss_tfr_q_")
+    path = _roundtrip_dir("ss_tfr_q_")
     write_tfrecords(docs.repartition(8), path).collect()
     back = read_tfrecords(
         spark,
@@ -11577,8 +11585,6 @@ def q_wet_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     task per archive, projected through wet_to_documents. Oracle reads
     the original table — header escaping and utf-8 payload framing are
     value-checked end to end."""
-    import tempfile
-
     from samza_spark.sources.warc import read_warc, wet_to_documents, write_wet
 
     docs = (
@@ -11592,7 +11598,7 @@ def q_wet_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         )
         .repartition(8)
     )
-    path = tempfile.mkdtemp(prefix="ss_wet_q_")
+    path = _roundtrip_dir("ss_wet_q_")
     write_wet(docs, path).collect()
     back = wet_to_documents(read_warc(spark, path))
     return back.select(

@@ -14,14 +14,22 @@ Samza semantics being reproduced (/root/reference):
 
 Catalyst has no per-pane trigger analog (SURVEY.md §4.2 item 1), so this is
 implemented with ``applyInPandasWithState`` for streams and an
-``applyInPandas`` emulation for batch/replay. State per key is a dict of
-open windows, exactly Samza's TimeSeriesStore layout ``(key, windowStart)``
-(samza-core/.../operators/impl/store/TimeSeriesStoreImpl.java:79).
+``applyInPandas`` emulation for batch/replay. State per key is one typed row
+of arrays with one element per open window, sorted by window start —
+Samza's TimeSeriesStore ``(key, windowStart)`` entries
+(samza-core/.../operators/impl/store/TimeSeriesStoreImpl.java:79) stored as
+columns.
+
+Every pane value goes through one fold table, ``_FOLD``: count, sum and avg
+add, min and max take ``fmin``/``fmax``. A null is skipped wherever it falls
+in the window; ``avg`` is sum over the pane's rows, nulls included in the
+rows.
 
 Scale note: state is partitioned by key across executors (RocksDB state
-store provider), and each Arrow batch is aggregated vectorised in pandas —
-no per-row Python in the hot path. Pane output is append-mode, so the sink
-sees the same pane stream Samza's downstream operators see.
+store provider), and each Arrow batch is folded with one numpy group-by
+over its windows — no per-row Python in the hot path. Pane output is
+append-mode, so the sink sees the same pane stream Samza's downstream
+operators see.
 """
 
 from __future__ import annotations
@@ -29,6 +37,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
@@ -41,7 +50,17 @@ from samza_spark.operators.windows import (
     WindowType,
 )
 
-_AGG_OPS = {"count", "sum", "min", "max", "avg"}
+# op -> (combine, identity): the one fold of every pane value, in the
+# stream's per-chunk group-by, its session merge and the replay alike. A null
+# enters as the identity, and fmin/fmax skip NaN, so nulls are skipped
+# wherever they fall; a pane of only nulls has min/max null and sum 0.
+_FOLD = {
+    "count": (np.add, 0),
+    "sum": (np.add, 0.0),
+    "avg": (np.add, 0.0),
+    "min": (np.fmin, np.nan),
+    "max": (np.fmax, np.nan),
+}
 
 
 @dataclass(frozen=True)
@@ -55,7 +74,7 @@ class AggSpec:
     col: str | None = None
 
     def __post_init__(self):
-        if self.op not in _AGG_OPS:
+        if self.op not in _FOLD:
             raise ValueError(f"unsupported pane agg: {self.op}")
 
 
@@ -83,76 +102,45 @@ def _flatten_triggers(t: Trigger | None) -> list[Trigger]:
     return [t]
 
 
-def _pane_agg(pdf: pd.DataFrame, aggs: Sequence[AggSpec]) -> dict:
-    """Vectorised partial aggregation of one Arrow chunk of a pane."""
-    out = {}
-    for a in aggs:
-        if a.op == "count":
-            out[a.name] = (len(pdf), None)
-        elif a.op == "sum":
-            out[a.name] = (float(pdf[a.col].sum()), None)
-        elif a.op == "min":
-            out[a.name] = (float(pdf[a.col].min()), None)
-        elif a.op == "max":
-            out[a.name] = (float(pdf[a.col].max()), None)
-        elif a.op == "avg":
-            out[a.name] = (float(pdf[a.col].sum()), len(pdf))
+def _fold_fields(aggs: Sequence[AggSpec]) -> list[tuple[str, str, str | None]]:
+    """The pane's folded values as ``(field, op, col)``: ``n`` (rows in the
+    pane, which ``count`` reads and ``avg`` divides by), then one ``v{j}``
+    per other ``aggs[j]``."""
+    return [("n", "count", None)] + [
+        (f"v{j}", a.op, a.col) for j, a in enumerate(aggs) if a.op != "count"
+    ]
+
+
+def _fold_inputs(pdf: pd.DataFrame, fields) -> list[np.ndarray]:
+    """Each row's input to each fold field; a null enters as the fold's
+    identity, so it is skipped wherever it falls."""
+    out = []
+    for _, op, col in fields:
+        if op == "count":
+            out.append(np.ones(len(pdf), np.int64))
+            continue
+        x = pdf[col].to_numpy(dtype=np.float64, na_value=np.nan)
+        out.append(np.where(np.isnan(x), _FOLD[op][1], x))
     return out
 
 
-def _merge_partial(state: dict, partial: dict, aggs: Sequence[AggSpec]) -> None:
-    for a in aggs:
-        new_v, new_n = partial[a.name]
-        if a.name not in state:
-            state[a.name] = [new_v, new_n]
-            continue
-        cur = state[a.name]
-        if a.op in ("count", "sum"):
-            cur[0] += new_v
-        elif a.op == "min":
-            cur[0] = min(cur[0], new_v)
-        elif a.op == "max":
-            cur[0] = max(cur[0], new_v)
-        elif a.op == "avg":
-            cur[0] += new_v
-            cur[1] += new_n
-
-
-def _merge_states(a: dict, b: dict, aggs: Sequence[AggSpec]) -> dict:
-    """Merge two pane states (both {name: [value, n]}) — used when session
-    windows coalesce. All supported aggs are commutative merges."""
-    out = {k: list(v) for k, v in a.items()}
-    for ag in aggs:
-        if ag.name not in b:
-            continue
-        bv, bn = b[ag.name]
-        if ag.name not in out:
-            out[ag.name] = [bv, bn]
-            continue
-        cur = out[ag.name]
-        if ag.op in ("count", "sum"):
-            cur[0] += bv
-        elif ag.op == "min":
-            cur[0] = min(cur[0], bv)
-        elif ag.op == "max":
-            cur[0] = max(cur[0], bv)
-        elif ag.op == "avg":
-            cur[0] += bv
-            cur[1] += bn
-    return out
-
-
-def _finalize(state: dict, aggs: Sequence[AggSpec]) -> dict:
-    out = {}
-    for a in aggs:
-        v, n = state[a.name]
+def _pane_frame(key_cols, key, aggs: Sequence[AggSpec], panes: dict) -> pd.DataFrame:
+    """One key's pane rows, the record layout both paths emit. ``panes``
+    maps ws, we, pane_seq, fire_reason, is_final and the fold fields to
+    equal-length sequences."""
+    n = np.asarray(panes["n"], np.int64)
+    cols = {k: [v] * len(n) for k, v in zip(key_cols, key)}
+    for c, f in (("window_start", "ws"), ("window_end", "we")):
+        cols[c] = np.asarray(panes[f], "datetime64[ms]").astype("datetime64[ns]")
+    for j, a in enumerate(aggs):
         if a.op == "count":
-            out[a.name] = int(v)
-        elif a.op == "avg":
-            out[a.name] = v / n if n else None
+            cols[a.name] = n
         else:
-            out[a.name] = v
-    return out
+            v = np.asarray(panes[f"v{j}"], np.float64)
+            cols[a.name] = v / n if a.op == "avg" else v
+    for c in ("pane_seq", "fire_reason", "is_final"):
+        cols[c] = np.asarray(panes[c])
+    return pd.DataFrame(cols)
 
 
 def output_schema_ddl(spec: WindowSpec, key_ddl: str, aggs: Sequence[AggSpec]) -> str:
@@ -179,7 +167,8 @@ def triggered_window_batch(
     """Replay-mode pane computation: what the trigger machinery *would* emit
     given rows in event-time order. Used for BATCH ApplicationMode parity
     (ApplicationConfig.java:44-46) and as the deterministic oracle for the
-    streaming operator's tests."""
+    streaming operator's tests: each message is folded alone, so count
+    triggers fire at exactly n messages."""
     win_ms = _duration_ms(spec.duration) if spec.duration else None
     gap_ms = _duration_ms(spec.gap) if spec.gap else None
     triggers = _flatten_triggers(spec.early_trigger)
@@ -193,77 +182,44 @@ def triggered_window_batch(
         if f.name in key_cols
     )
     out_ddl = output_schema_ddl(spec, key_ddl, aggs)
+    fields = _fold_fields(aggs)
+    combines = [_FOLD[op][0] for _, op, _ in fields]
+    identities = [_FOLD[op][1] for _, op, _ in fields]
 
     def emit_panes(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(ts_col, kind="mergesort")
         ts_ms = (pdf[ts_col].astype("int64") // 1_000_000).to_numpy()
         if spec.window_type is WindowType.SESSION:
-            bounds = []
-            start = prev = None
-            for t in ts_ms:
-                if start is None:
-                    start = prev = t
-                elif t - prev > gap_ms:
-                    bounds.append((start, prev + gap_ms))
-                    start = prev = t
-                else:
-                    prev = t
-            if start is not None:
-                bounds.append((start, prev + gap_ms))
-
-            def window_of(t):
-                for s, e in bounds:
-                    if s <= t < e:
-                        return (s, e)
-                return (bounds[-1][0], bounds[-1][1])
-
-            win_starts = [window_of(t) for t in ts_ms]
+            # a session runs from its first event to its last event + gap
+            brk = np.diff(ts_ms) > gap_ms
+            sid = np.cumsum(np.r_[False, brk])
+            ws_rows = ts_ms[np.r_[True, brk]][sid]
+            we_rows = ts_ms[np.r_[brk, True]][sid] + gap_ms
         else:
-            win_starts = [((t // win_ms) * win_ms, (t // win_ms) * win_ms + win_ms) for t in ts_ms]
+            ws_rows = ts_ms // win_ms * win_ms
+            we_rows = ws_rows + win_ms
 
         rows = []
-        open_windows: dict = {}
-        order: list = []
-        for i, (ws, we) in enumerate(win_starts):
-            wkey = (ws, we)
-            st = open_windows.setdefault(wkey, {"state": {}, "n_since_fire": 0, "seq": 0})
-            if wkey not in order:
-                order.append(wkey)
-            chunk = pdf.iloc[i : i + 1]
-            _merge_partial(st["state"], _pane_agg(chunk, aggs), aggs)
-            st["n_since_fire"] += 1
-            fire_n = next((n for n in count_ns if st["n_since_fire"] >= n), None)
+        open_windows: dict = {}  # (ws, we) -> [rows since fire, pane_seq, fold values]
+        inputs = zip(*(x.tolist() for x in _fold_inputs(pdf, fields)))
+        for wkey, xs in zip(zip(ws_rows.tolist(), we_rows.tolist()), inputs):
+            st = open_windows.setdefault(wkey, [0, 0, identities])
+            st[2] = [c(v, x) for c, v, x in zip(combines, st[2], xs)]
+            st[0] += 1
+            fire_n = next((n for n in count_ns if st[0] >= n), None)
             if fire_n is not None:
-                vals = _finalize(st["state"], aggs)
-                rows.append((wkey, vals, st["seq"], f"count({fire_n})", False))
-                st["seq"] += 1
-                st["n_since_fire"] = 0
+                rows.append((*wkey, st[1], f"count({fire_n})", False, *st[2]))
+                st[0], st[1] = 0, st[1] + 1
                 if discarding:
-                    st["state"] = {}
-        for wkey in order:
-            st = open_windows[wkey]
-            if st["state"]:
-                vals = _finalize(st["state"], aggs)
-                rows.append((wkey, vals, st["seq"], "window_close", True))
+                    st[2] = identities
+        for wkey, (_, seq, vals) in open_windows.items():
+            if vals[0]:
+                rows.append((*wkey, seq, "window_close", True, *vals))
 
-        key_vals = {k: pdf[k].iloc[0] for k in key_cols}
-        recs = []
-        for (ws, we), vals, seq, reason, final in rows:
-            rec = dict(key_vals)
-            rec["window_start"] = pd.Timestamp(ws, unit="ms")
-            rec["window_end"] = pd.Timestamp(we, unit="ms")
-            rec.update(vals)
-            rec["pane_seq"] = seq
-            rec["fire_reason"] = reason
-            rec["is_final"] = final
-            recs.append(rec)
-        cols = (
-            key_cols
-            + ["window_start", "window_end"]
-            + [a.name for a in aggs]
-            + ["pane_seq", "fire_reason", "is_final"]
-        )
-        return pd.DataFrame(recs, columns=cols)
+        names = ["ws", "we", "pane_seq", "fire_reason", "is_final"] + [f for f, _, _ in fields]
+        # every window of a non-empty group fires at least once
+        panes = dict(zip(names, zip(*rows)))
+        return _pane_frame(key_cols, [pdf[k].iloc[0] for k in key_cols], aggs, panes)
 
     grouped = df.groupBy(*[F.col(k) for k in key_cols]) if key_cols else df.groupBy(F.lit(1).alias("__g"))
     out = grouped.applyInPandas(lambda pdf: emit_panes(pdf), out_ddl)
@@ -274,6 +230,18 @@ def triggered_window_batch(
 # Streaming operator: applyInPandasWithState.
 # ---------------------------------------------------------------------------
 
+# Per open window bookkeeping kept in the state row: (field, state type).
+_WINDOW_FIELDS = [
+    ("ws", "bigint"),
+    ("we", "bigint"),
+    ("since_fire", "bigint"),
+    ("pane_seq", "int"),
+    ("first_ms", "bigint"),
+    ("last_ms", "bigint"),
+    ("quiet_fired", "boolean"),
+]
+_NP_TYPES = {"bigint": np.int64, "int": np.int32, "boolean": np.bool_, "double": np.float64}
+
 
 def triggered_window_stream(
     df: DataFrame,
@@ -282,24 +250,31 @@ def triggered_window_stream(
 ) -> DataFrame:
     """Streaming pane computation with per-key state.
 
-    State layout: one dict per open window keyed by window_start —
-    Samza's TimeSeriesStore ``(key, windowStart)`` composite key
-    (TimeSeriesStoreImpl.java:79) carried in Spark's state store.
-    Time-based triggers use ProcessingTimeTimeout, matching Samza's
-    injected-Clock processing-time trigger evaluation.
+    State layout: one typed row per key whose fields are arrays with one
+    element per open window, sorted by window start — Samza's
+    TimeSeriesStore ``(key, windowStart)`` entries (TimeSeriesStoreImpl.
+    java:79) as columns: ``ws``, ``we``, ``since_fire`` (rows since the last
+    fire), ``pane_seq``, ``first_ms``/``last_ms`` (arrival clock),
+    ``quiet_fired``, ``n`` (rows in the pane state) and one ``v{j}`` per
+    non-count aggregate. Each Arrow chunk is folded with one group-by over
+    window positions through ``_FOLD``; nulls are skipped wherever they
+    fall. Time-based triggers use ProcessingTimeTimeout, matching Samza's
+    injected-Clock processing-time trigger evaluation; windows close on
+    that clock too (fixed windows ``duration`` after first arrival, sessions
+    one gap after last arrival), so a ``with_watermark`` delay is not
+    honoured here and late rows fold into a new window.
 
-    SESSION windows keep dynamic ``(start, last_event+gap)`` state keys;
-    incoming chunks are split at >gap breaks and coalesced with every
-    overlapping open session (Samza's session merge), and the gap timer
-    closes a session one gap after its last event.
+    SESSION windows keep dynamic ``(start, last_event+gap)`` windows;
+    incoming chunks are split at >gap breaks and each piece is coalesced
+    with every overlapping open session (Samza's session merge), the
+    merged state folded through the same table.
 
     Granularity note: Samza evaluates count triggers per *message*
     (RunLoop drives one envelope at a time); under micro-batching the
-    trigger condition is checked per Arrow chunk, so a count(3) pane may
-    carry more than 3 rows when a chunk overshoots the threshold. The batch
-    replay (`triggered_window_batch`) keeps exact per-message semantics and
-    is the reference for tests/oracles."""
-    import json
+    trigger condition is checked once per window per Arrow chunk, so a
+    count(3) pane may carry more than 3 rows when a chunk overshoots the
+    threshold. The batch replay (`triggered_window_batch`) keeps exact
+    per-message semantics and is the reference for tests/oracles."""
     import time as _time
 
     is_session = spec.window_type is WindowType.SESSION
@@ -317,6 +292,7 @@ def triggered_window_stream(
     key_cols = list(spec.key_cols)
     ts_col = spec.ts_col
     close_after_ms = win_ms or gap_ms or 60_000
+    next_due = min([close_after_ms] + since_first + since_last)
 
     key_ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
@@ -324,101 +300,87 @@ def triggered_window_stream(
         if f.name in key_cols
     )
     out_ddl = output_schema_ddl(spec, key_ddl, aggs)
-    state_ddl = "payload string"
+    fields = _fold_fields(aggs)
+    state_fields = _WINDOW_FIELDS + [
+        (f, "bigint" if op == "count" else "double") for f, op, _ in fields
+    ]
+    state_ddl = ", ".join(f"{f} array<{t}>" for f, t in state_fields)
+    pane_fields = ["ws", "we", "pane_seq"] + [f for f, _, _ in fields]
 
     def fn(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            windows = json.loads(state.get[0])
-        else:
-            windows = {}
         now_ms = int(_time.time() * 1000)
-        out_rows = []
+        stored = state.get if state.exists else [[]] * len(state_fields)
+        w = {f: np.asarray(v, _NP_TYPES[t]) for (f, t), v in zip(state_fields, stored)}
+        fired = []
 
-        def fire(wkey: str, st: dict, reason: str, final: bool) -> None:
-            vals = _finalize({k: list(v) for k, v in st["state"].items()}, aggs)
-            rec = {k: v for k, v in zip(key_cols, key)}
-            ws, we = map(int, wkey.split(":"))
-            rec["window_start"] = pd.Timestamp(ws, unit="ms")
-            rec["window_end"] = pd.Timestamp(we, unit="ms")
-            rec.update(vals)
-            rec["pane_seq"] = st["seq"]
-            rec["fire_reason"] = reason
-            rec["is_final"] = final
-            out_rows.append(rec)
-            st["seq"] += 1
-            st["n_since_fire"] = 0
+        def fire(idx, reason: str, final: bool) -> None:
+            pane = {f: w[f][idx] for f in pane_fields}
+            pane["fire_reason"] = np.full(len(idx), reason, dtype=object)
+            pane["is_final"] = np.full(len(idx), final)
+            fired.append(pane)
+            w["pane_seq"][idx] += 1
+            w["since_fire"][idx] = 0
             if discarding:
-                st["state"] = {}
+                for f, op, _ in fields:
+                    w[f][idx] = _FOLD[op][1]
 
-        def fresh_st():
-            return {
-                "state": {},
-                "n_since_fire": 0,
-                "seq": 0,
-                "first_ms": now_ms,
-                "last_ms": now_ms,
-                "quiet_fired": False,
+        def insert(ws, we, **init) -> None:
+            """Open windows ``[ws, we)`` (arrays), keeping ``w`` sorted."""
+            at = np.searchsorted(w["ws"], ws)
+            fresh = {"ws": ws, "we": we, "first_ms": now_ms, "last_ms": now_ms}
+            fresh.update({f: _FOLD[op][1] for f, op, _ in fields}, **init)
+            for f, _ in state_fields:
+                w[f] = np.insert(w[f], at, fresh.get(f, 0))
+
+        def coalesce(s: int, e: int) -> None:
+            """Merge the session ``[s, e]`` with every overlapping open one."""
+            hit = (w["ws"] <= e) & (s <= w["we"])
+            init = {
+                f: _FOLD[op][0].reduce(w[f][hit], initial=_FOLD[op][1])
+                for f, op, _ in fields
             }
+            init["since_fire"] = w["since_fire"][hit].sum()
+            init["pane_seq"] = w["pane_seq"][hit].max(initial=0)
+            init["first_ms"] = w["first_ms"][hit].min(initial=now_ms)
+            ws = min(s, w["ws"][hit].min(initial=s))
+            we = max(e, w["we"][hit].max(initial=e))
+            for f in w:
+                w[f] = w[f][~hit]
+            insert(np.array([ws]), np.array([we]), **init)
 
-        def ingest(wkey: str, chunk: pd.DataFrame) -> None:
-            st = windows.setdefault(wkey, fresh_st())
-            st["quiet_fired"] = False  # new data re-arms time triggers
-            partial = _pane_agg(chunk, aggs)
-            merged = {k: list(v) for k, v in st["state"].items()}
-            _merge_partial(merged, partial, aggs)
-            st["state"] = merged
-            st["n_since_fire"] += len(chunk)
-            st["last_ms"] = now_ms
-            fire_n = next((n for n in count_ns if st["n_since_fire"] >= n), None)
-            if fire_n is not None:
-                fire(wkey, st, f"count({fire_n})", False)
+        def ingest(pdf: pd.DataFrame, at: np.ndarray) -> None:
+            """Fold the chunk into the windows at positions ``at`` (one per
+            row), then fire each touched window's first due count trigger."""
+            order = np.argsort(at, kind="stable")
+            pos, starts, counts = np.unique(at[order], return_index=True, return_counts=True)
+            for (f, op, _), x in zip(fields, _fold_inputs(pdf, fields)):
+                combine = _FOLD[op][0]
+                w[f][pos] = combine(w[f][pos], combine.reduceat(x[order], starts))
+            w["since_fire"][pos] += counts
+            w["last_ms"][pos] = now_ms
+            w["quiet_fired"][pos] = False  # new data re-arms time triggers
+            for n in count_ns:
+                due = pos[w["since_fire"][pos] >= n]
+                fire(due, f"count({n})", False)
+                pos = np.setdiff1d(pos, due)
 
-        def ingest_session(chunk: pd.DataFrame, ts_ms) -> None:
-            """Sessions: split the (sorted) chunk at >gap breaks, then merge
-            each mini-session with every overlapping open session — Samza's
-            session coalescing (WindowOperatorImpl session merge) carried in
-            the state store as dynamic (start, end) keys."""
-            order = ts_ms.argsort(kind="mergesort")
-            sorted_ts = ts_ms[order]
-            breaks = [0]
-            for i in range(1, len(sorted_ts)):
-                if sorted_ts[i] - sorted_ts[i - 1] > gap_ms:
-                    breaks.append(i)
-            breaks.append(len(sorted_ts))
-            for b0, b1 in zip(breaks, breaks[1:]):
-                idx = order[b0:b1]
-                mini = chunk.iloc[idx]
-                s, e = int(sorted_ts[b0]), int(sorted_ts[b1 - 1]) + gap_ms
-                overlapping = []
-                for wkey in list(windows):
-                    ws, we = map(int, wkey.split(":"))
-                    if s <= we and ws <= e:
-                        overlapping.append((wkey, ws, we))
-                new_ws = min([s] + [ws for _, ws, _ in overlapping])
-                new_we = max([e] + [we for _, _, we in overlapping])
-                merged_st = fresh_st()
-                for wkey, _, _ in overlapping:
-                    old = windows.pop(wkey)
-                    merged_st["state"] = _merge_states(merged_st["state"], old["state"], aggs)
-                    merged_st["n_since_fire"] += old["n_since_fire"]
-                    merged_st["seq"] = max(merged_st["seq"], old["seq"])
-                    merged_st["first_ms"] = min(merged_st["first_ms"], old["first_ms"])
-                windows[f"{new_ws}:{new_we}"] = merged_st
-                ingest(f"{new_ws}:{new_we}", mini)
-
-        got_data = False
         for pdf in pdf_iter:
             if pdf.empty:
                 continue
-            got_data = True
             ts_ms = (pdf[ts_col].astype("int64") // 1_000_000).to_numpy()
             if is_session:
-                ingest_session(pdf, ts_ms)
-                continue
-            for ws_val, chunk in pdf.groupby((ts_ms // win_ms) * win_ms if win_ms else 0):
-                ws = int(ws_val)
-                we = ws + (win_ms or gap_ms)
-                ingest(f"{ws}:{we}", chunk)
+                sorted_ts = np.sort(ts_ms)
+                brk = np.diff(sorted_ts) > gap_ms
+                firsts, lasts = sorted_ts[np.r_[True, brk]], sorted_ts[np.r_[brk, True]]
+                for s, e in zip(firsts.tolist(), lasts.tolist()):
+                    coalesce(s, e + gap_ms)
+                ingest(pdf, np.searchsorted(w["ws"], ts_ms, side="right") - 1)
+            else:
+                ws_rows = ts_ms // win_ms * win_ms
+                new = np.setdiff1d(ws_rows, w["ws"])
+                if len(new):
+                    insert(new, new + win_ms)
+                ingest(pdf, np.searchsorted(w["ws"], ws_rows))
 
         # Close/time-trigger sweep runs on EVERY invocation, not only on
         # timeout: each data batch resets the timeout clock, so under
@@ -426,50 +388,38 @@ def triggered_window_stream(
         # window_close and expired windows would pile up in state forever.
         # Windows touched this batch have last_ms == now_ms, so fresh
         # sessions never close early and last_due never fires spuriously.
-        for wkey in list(windows):
-            st = windows[wkey]
-            first_due = any(now_ms - st["first_ms"] >= d for d in since_first)
-            last_due = any(now_ms - st["last_ms"] >= d for d in since_last)
-            # sessions close one gap after the LAST event (arrival-clock
-            # proxy for the gap timer); fixed windows after their span
-            closing = (
-                now_ms - st["last_ms"] >= gap_ms
-                if is_session
-                else now_ms - st["first_ms"] >= close_after_ms
-            )
-            if closing:
-                if st["state"]:
-                    fire(wkey, st, "window_close", True)
-                del windows[wkey]
-            elif (
-                (first_due or last_due)
-                and st["state"]
-                and not st.get("quiet_fired")
-            ):
-                # one fire per quiet period (Samza re-evaluates
-                # timeSinceLastMessage only as messages arrive; repeat
-                # semantics need Triggers.repeat)
-                fire(wkey, st, "time_trigger", False)
-                st["quiet_fired"] = True
-
-        if windows:
-            state.update((json.dumps(windows),))
-            next_due = min(
-                [close_after_ms]
-                + [d for d in since_first]
-                + [d for d in since_last]
-            )
-            state.setTimeoutDuration(int(next_due))
-        elif state.exists:
-            state.remove()
-
-        cols = (
-            key_cols
-            + ["window_start", "window_end"]
-            + [a.name for a in aggs]
-            + ["pane_seq", "fire_reason", "is_final"]
+        since_first_ms = now_ms - w["first_ms"]
+        since_last_ms = now_ms - w["last_ms"]
+        live = w["n"] > 0
+        # sessions close one gap after the LAST event (arrival-clock
+        # proxy for the gap timer); fixed windows after their span
+        closing = (
+            since_last_ms >= gap_ms if is_session else since_first_ms >= close_after_ms
         )
-        yield pd.DataFrame(out_rows, columns=cols)
+        due = np.zeros(len(closing), bool)
+        for d in since_first:
+            due |= since_first_ms >= d
+        for d in since_last:
+            due |= since_last_ms >= d
+        # one time fire per quiet period (Samza re-evaluates
+        # timeSinceLastMessage only as messages arrive; repeat semantics
+        # need Triggers.repeat)
+        quiet = np.flatnonzero(due & live & ~closing & ~w["quiet_fired"])
+        fire(quiet, "time_trigger", False)
+        w["quiet_fired"][quiet] = True
+        fire(np.flatnonzero(closing & live), "window_close", True)
+
+        if closing.all():
+            if state.exists:
+                state.remove()
+        else:
+            state.update(tuple(w[f][~closing].tolist() for f, _ in state_fields))
+            state.setTimeoutDuration(next_due)
+
+        # the sweep always fires (maybe nothing), so ``fired`` is never empty
+        yield _pane_frame(
+            key_cols, key, aggs, {f: np.concatenate([p[f] for p in fired]) for f in fired[0]}
+        )
 
     return (
         df.groupBy(*[F.col(k) for k in key_cols])

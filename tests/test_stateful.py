@@ -4,6 +4,8 @@ definition the streaming operator is tested against)."""
 
 import datetime as dt
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from samza_spark.operators.windows import AccumulationMode, Triggers, Windows
@@ -91,3 +93,151 @@ def test_session_window_batch_panes(spark):
     df = spark.createDataFrame(rows, "k string, t timestamp")
     out = triggered_window_batch(df, spec, [AggSpec("n", "count")]).collect()
     assert sorted(r.n for r in out) == [2, 2]  # two sessions of two events
+
+
+@pytest.mark.parametrize("null_at", [0, 1, 2])
+def test_min_max_skip_null_wherever_it_falls(spark, null_at):
+    """A null value is skipped by min/max (and sum) at any position in the
+    window; count and avg's denominator count the null's row."""
+    spec = Windows.keyed_tumbling_window("k", "t", "1 hour").set_early_trigger(
+        Triggers.count(100)  # never fires; single close pane
+    )
+    vals = [1.0, 5.0]
+    vals.insert(null_at, None)
+    rows = [("k", ts(0, i), v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "k string, t timestamp, v double")
+    aggs = [
+        AggSpec("n", "count"), AggSpec("s", "sum", "v"), AggSpec("lo", "min", "v"),
+        AggSpec("hi", "max", "v"), AggSpec("a", "avg", "v"),
+    ]
+    [row] = triggered_window_batch(df, spec, aggs).collect()
+    assert (row.n, row.s, row.lo, row.hi, row.a) == (3, 6.0, 1.0, 5.0, 2.0)
+
+
+class _Capture:
+    """Stands in for a DataFrame to capture the pandas function a triggered
+    window hands to Spark, so it can be driven without a query."""
+
+    def __init__(self, schema):
+        self.schema = schema
+
+    def groupBy(self, *cols):
+        return self
+
+    def applyInPandas(self, fn, ddl):
+        self.fn = fn
+
+    def applyInPandasWithState(self, fn, *args):
+        self.fn = fn
+
+
+class _State:
+    exists = False
+
+    def update(self, value):
+        self.exists, self.get = True, tuple(value)
+
+    def remove(self):
+        self.exists = False
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+
+def _drive(spark, monkeypatch, spec, aggs, chunks):
+    """Feed ``chunks`` to the stream's state function at one arrival time,
+    then close every window; returns the replay's and the stream's panes."""
+    import time
+
+    import pandas as pd
+
+    from samza_spark.streaming.stateful import triggered_window_stream
+
+    schema = spark.createDataFrame([], "k string, t timestamp, v double").schema
+    replay, stream = _Capture(schema), _Capture(schema)
+    triggered_window_batch(replay, spec, aggs)
+    triggered_window_stream(stream, spec, aggs)
+    clock = [1_000.0]
+    monkeypatch.setattr(time, "time", lambda: clock[0])
+    state, out = _State(), []
+    for chunk in chunks:
+        out.extend(stream.fn(("k",), iter([chunk]), state))
+        assert all(isinstance(v, list) for v in state.get)  # typed arrays as lists
+    clock[0] += 86_400
+    out.extend(stream.fn(("k",), iter([]), state))
+    assert not state.exists
+    return replay.fn(pd.concat(chunks)), pd.concat(out)
+
+
+def _events(n, seed):
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    t = pd.Timestamp("2024-01-01 10:00") + pd.to_timedelta(
+        np.sort(rng.integers(0, 600_000, n)), unit="ms"
+    )
+    v = rng.integers(-5, 20, n).astype(float)
+    v[rng.random(n) < 0.2] = np.nan
+    return pd.DataFrame({"k": "k", "t": t, "v": v})
+
+
+_ALL_OPS = [
+    AggSpec("n", "count"), AggSpec("s", "sum", "v"), AggSpec("lo", "min", "v"),
+    AggSpec("hi", "max", "v"), AggSpec("a", "avg", "v"),
+]
+
+
+@pytest.mark.parametrize("mode", list(AccumulationMode))
+@pytest.mark.parametrize("session", [False, True])
+def test_stream_state_fn_one_message_chunks_equal_replay(spark, monkeypatch, mode, session):
+    """Fed one message per chunk in event-time order, the stream's typed
+    state emits exactly the replay's panes (count triggers in list order,
+    session coalescing, DISCARDING resets, window close)."""
+    import pandas as pd
+
+    if session:
+        spec = Windows.keyed_session_window("k", "t", "20 seconds")
+    else:
+        spec = Windows.keyed_tumbling_window("k", "t", "1 minute")
+    spec = spec.set_early_trigger(
+        Triggers.any(Triggers.count(4), Triggers.count(3))
+    ).set_accumulation_mode(mode)
+    ev = _events(120, seed=3)
+    replay, stream = _drive(spark, monkeypatch, spec, _ALL_OPS,
+                            [ev.iloc[i:i + 1] for i in range(len(ev))])
+    cols = ["window_start", "window_end", "n", "s", "lo", "hi", "a",
+            "pane_seq", "fire_reason", "is_final"]
+
+    def norm(df):
+        df = df[cols].sort_values(["window_start", "pane_seq"]).reset_index(drop=True)
+        if session:  # an early pane of a growing session ends where it stood
+            df.loc[~df.is_final, "window_end"] = pd.NaT  # the replay knows the last end
+        return df
+
+    assert set(replay.fire_reason) == {"count(3)", "window_close"}
+    pd.testing.assert_frame_equal(norm(stream), norm(replay), check_dtype=False)
+
+
+def test_stream_state_fn_any_chunking_keeps_final_panes(spark, monkeypatch):
+    """Whatever the chunking and arrival order, each window's close pane
+    under ACCUMULATING equals the replay's."""
+    import numpy as np
+
+    spec = (
+        Windows.keyed_tumbling_window("k", "t", "1 minute")
+        .set_early_trigger(Triggers.count(7))
+        .set_accumulation_mode(AccumulationMode.ACCUMULATING)
+    )
+    ev = _events(300, seed=5).sample(frac=1.0, random_state=5)
+    cuts = np.sort(np.random.default_rng(5).choice(np.arange(1, 300), 9, replace=False))
+    chunks = [ev.iloc[a:b] for a, b in zip(np.r_[0, cuts], np.r_[cuts, 300])]
+    replay, stream = _drive(spark, monkeypatch, spec, _ALL_OPS, chunks)
+    cols = ["window_start", "window_end", "n", "s", "lo", "hi", "a"]
+
+    def finals(df):
+        return df[df.is_final][cols].sort_values("window_start").reset_index(drop=True)
+
+    import pandas as pd
+
+    pd.testing.assert_frame_equal(finals(stream), finals(replay), check_dtype=False)
