@@ -3,13 +3,25 @@ ACCUMULATING vs DISCARDING panes — batch replay path (the deterministic
 definition the streaming operator is tested against)."""
 
 import datetime as dt
+import time
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
 from samza_spark.operators.windows import AccumulationMode, Triggers, Windows
-from samza_spark.streaming.stateful import AggSpec, triggered_window_batch
+from samza_spark.streaming.stateful import (
+    AggSpec,
+    triggered_window_batch,
+    triggered_window_stream,
+)
+
+_ALL_OPS = [
+    AggSpec("n", "count"), AggSpec("s", "sum", "v"), AggSpec("lo", "min", "v"),
+    AggSpec("hi", "max", "v"), AggSpec("a", "avg", "v"),
+]
 
 
 def ts(minute, second=0):
@@ -106,11 +118,7 @@ def test_min_max_skip_null_wherever_it_falls(spark, null_at):
     vals.insert(null_at, None)
     rows = [("k", ts(0, i), v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "k string, t timestamp, v double")
-    aggs = [
-        AggSpec("n", "count"), AggSpec("s", "sum", "v"), AggSpec("lo", "min", "v"),
-        AggSpec("hi", "max", "v"), AggSpec("a", "avg", "v"),
-    ]
-    [row] = triggered_window_batch(df, spec, aggs).collect()
+    [row] = triggered_window_batch(df, spec, _ALL_OPS).collect()
     assert (row.n, row.s, row.lo, row.hi, row.a) == (3, 6.0, 1.0, 5.0, 2.0)
 
 
@@ -147,12 +155,6 @@ class _State:
 def _drive(spark, monkeypatch, spec, aggs, chunks):
     """Feed ``chunks`` to the stream's state function at one arrival time,
     then close every window; returns the replay's and the stream's panes."""
-    import time
-
-    import pandas as pd
-
-    from samza_spark.streaming.stateful import triggered_window_stream
-
     schema = spark.createDataFrame([], "k string, t timestamp, v double").schema
     replay, stream = _Capture(schema), _Capture(schema)
     triggered_window_batch(replay, spec, aggs)
@@ -170,32 +172,21 @@ def _drive(spark, monkeypatch, spec, aggs, chunks):
 
 
 def _events(n, seed):
-    import numpy as np
-    import pandas as pd
-
     rng = np.random.default_rng(seed)
     t = pd.Timestamp("2024-01-01 10:00") + pd.to_timedelta(
         np.sort(rng.integers(0, 600_000, n)), unit="ms"
     )
-    v = rng.integers(-5, 20, n).astype(float)
+    v = rng.integers(-5, 20, n).astype(float)  # integral: sums exact in any order
     v[rng.random(n) < 0.2] = np.nan
     return pd.DataFrame({"k": "k", "t": t, "v": v})
-
-
-_ALL_OPS = [
-    AggSpec("n", "count"), AggSpec("s", "sum", "v"), AggSpec("lo", "min", "v"),
-    AggSpec("hi", "max", "v"), AggSpec("a", "avg", "v"),
-]
 
 
 @pytest.mark.parametrize("mode", list(AccumulationMode))
 @pytest.mark.parametrize("session", [False, True])
 def test_stream_state_fn_one_message_chunks_equal_replay(spark, monkeypatch, mode, session):
     """Fed one message per chunk in event-time order, the stream's typed
-    state emits exactly the replay's panes (count triggers in list order,
+    state emits exactly the replay's panes (count triggers,
     session coalescing, DISCARDING resets, window close)."""
-    import pandas as pd
-
     if session:
         spec = Windows.keyed_session_window("k", "t", "20 seconds")
     else:
@@ -222,8 +213,6 @@ def test_stream_state_fn_one_message_chunks_equal_replay(spark, monkeypatch, mod
 def test_stream_state_fn_any_chunking_keeps_final_panes(spark, monkeypatch):
     """Whatever the chunking and arrival order, each window's close pane
     under ACCUMULATING equals the replay's."""
-    import numpy as np
-
     spec = (
         Windows.keyed_tumbling_window("k", "t", "1 minute")
         .set_early_trigger(Triggers.count(7))
@@ -237,7 +226,5 @@ def test_stream_state_fn_any_chunking_keeps_final_panes(spark, monkeypatch):
 
     def finals(df):
         return df[df.is_final][cols].sort_values("window_start").reset_index(drop=True)
-
-    import pandas as pd
 
     pd.testing.assert_frame_equal(finals(stream), finals(replay), check_dtype=False)
