@@ -11,6 +11,11 @@ configuration the rest of the engine assumes:
 * Arrow enabled for the Pandas-UDF slow path
 * RocksDB state store provider for streaming state (Samza's RocksDB stores,
   /root/reference samza-kv-rocksdb/.../RocksDbKeyValueStore.scala)
+* Python workers fork from :mod:`samza_spark.worker_daemon`
+  (``spark.python.daemon.module``, always set): every task's
+  ``importlib.invalidate_caches()`` otherwise re-reads pyspark.zip's
+  directory once per cached zip importer (0.2-0.6 s a task on CPython
+  3.11), a fixed cost Samza's long-lived containers never pay per message
 """
 
 from __future__ import annotations
@@ -28,6 +33,10 @@ class SessionConfig:
     ``shuffle_partitions`` should track total cores for local/test runs and
     ~2-3x total cluster cores for large jobs; at 100 TB input you instead cap
     partition *size* via ``files_max_partition_bytes`` and let AQE coalesce.
+
+    ``extra`` is applied last and overrides any engine default. A
+    ``spark.python.daemon.module`` set there replaces the engine's worker
+    daemon, and its workers pay the per-task zip re-read again.
     """
 
     app_name: str = "samza_spark"
@@ -79,6 +88,9 @@ def get_session(cfg: SessionConfig | None = None) -> SparkSession:
         # full suites shared one box); correctness gates should wait, not
         # error
         "spark.sql.broadcastTimeout": "1200",
+        # every Python worker forks from the engine daemon, which spares it
+        # re-reading pyspark.zip's directory on each task (worker_daemon.py)
+        "spark.python.daemon.module": "samza_spark.worker_daemon",
     }
     if cfg.use_rocksdb_state:
         conf["spark.sql.streaming.stateStore.providerClass"] = (

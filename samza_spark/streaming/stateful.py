@@ -22,8 +22,8 @@ columns.
 
 Every pane value goes through one fold table, ``_FOLD``: count, sum and avg
 add, min and max take ``fmin``/``fmax``. A null is skipped wherever it falls
-in the window; ``avg`` is sum over the pane's rows, nulls included in the
-rows.
+in the window; ``avg`` is its sum over its own count of non-null values, as
+Spark SQL's ``avg``, so a pane of only nulls has a null avg.
 
 Scale note: state is partitioned by key across executors (RocksDB state
 store provider), and each Arrow batch is folded with one numpy group-by
@@ -53,7 +53,7 @@ from samza_spark.operators.windows import (
 # op -> (combine, identity): the one fold of every pane value, in the
 # stream's per-chunk group-by, its session merge and the replay alike. A null
 # enters as the identity, and fmin/fmax skip NaN, so nulls are skipped
-# wherever they fall; a pane of only nulls has min/max null and sum 0.
+# wherever they fall; a pane of only nulls has min/max/avg null and sum 0.
 _FOLD = {
     "count": (np.add, 0),
     "sum": (np.add, 0.0),
@@ -104,23 +104,32 @@ def _flatten_triggers(t: Trigger | None) -> list[Trigger]:
 
 def _fold_fields(aggs: Sequence[AggSpec]) -> list[tuple[str, str, str | None]]:
     """The pane's folded values as ``(field, op, col)``: ``n`` (rows in the
-    pane, which ``count`` reads and ``avg`` divides by), then one ``v{j}``
-    per other ``aggs[j]``."""
-    return [("n", "count", None)] + [
-        (f"v{j}", a.op, a.col) for j, a in enumerate(aggs) if a.op != "count"
-    ]
+    pane, which ``count`` reads), then one ``v{j}`` per other ``aggs[j]``
+    and, for an ``avg``, one ``c{j}`` counting its non-null values, which
+    the avg divides by."""
+    fields = [("n", "count", None)]
+    for j, a in enumerate(aggs):
+        if a.op != "count":
+            fields.append((f"v{j}", a.op, a.col))
+        if a.op == "avg":
+            fields.append((f"c{j}", "count", a.col))
+    return fields
 
 
 def _fold_inputs(pdf: pd.DataFrame, fields) -> list[np.ndarray]:
     """Each row's input to each fold field; a null enters as the fold's
-    identity, so it is skipped wherever it falls."""
+    identity, so it is skipped wherever it falls. A count over a column
+    counts its non-null values."""
     out = []
     for _, op, col in fields:
-        if op == "count":
+        if op == "count" and col is None:
             out.append(np.ones(len(pdf), np.int64))
             continue
         x = pdf[col].to_numpy(dtype=np.float64, na_value=np.nan)
-        out.append(np.where(np.isnan(x), _FOLD[op][1], x))
+        if op == "count":
+            out.append((~np.isnan(x)).astype(np.int64))
+        else:
+            out.append(np.where(np.isnan(x), _FOLD[op][1], x))
     return out
 
 
@@ -137,7 +146,10 @@ def _pane_frame(key_cols, key, aggs: Sequence[AggSpec], panes: dict) -> pd.DataF
             cols[a.name] = n
         else:
             v = np.asarray(panes[f"v{j}"], np.float64)
-            cols[a.name] = v / n if a.op == "avg" else v
+            if a.op == "avg":
+                c = np.asarray(panes[f"c{j}"], np.int64)
+                v = np.divide(v, c, out=np.full(len(v), np.nan), where=c > 0)
+            cols[a.name] = v
     for c in ("pane_seq", "fire_reason", "is_final"):
         cols[c] = np.asarray(panes[c])
     return pd.DataFrame(cols)
@@ -255,14 +267,15 @@ def triggered_window_stream(
     TimeSeriesStore ``(key, windowStart)`` entries (TimeSeriesStoreImpl.
     java:79) as columns: ``ws``, ``we``, ``since_fire`` (rows since the last
     fire), ``pane_seq``, ``first_ms``/``last_ms`` (arrival clock),
-    ``quiet_fired``, ``n`` (rows in the pane state) and one ``v{j}`` per
-    non-count aggregate. Each Arrow chunk is folded with one group-by over
-    window positions through ``_FOLD``; nulls are skipped wherever they
-    fall. Time-based triggers use ProcessingTimeTimeout, matching Samza's
-    injected-Clock processing-time trigger evaluation; windows close on
-    that clock too (fixed windows ``duration`` after first arrival, sessions
-    one gap after last arrival), so a ``with_watermark`` delay is not
-    honoured here and late rows fold into a new window.
+    ``quiet_fired``, ``n`` (rows in the pane state), one ``v{j}`` per
+    non-count aggregate and one ``c{j}`` (non-null values) per avg. Each
+    Arrow chunk is folded with one group-by over window positions through
+    ``_FOLD``; nulls are skipped wherever they fall. Time-based triggers
+    use ProcessingTimeTimeout, matching Samza's injected-Clock
+    processing-time trigger evaluation; windows close on that clock too
+    (fixed windows ``duration`` after first arrival, sessions one gap after
+    last arrival), so a ``with_watermark`` delay is not honoured here and
+    late rows fold into a new window.
 
     SESSION windows keep dynamic ``(start, last_event+gap)`` windows;
     incoming chunks are split at >gap breaks and each piece is coalesced

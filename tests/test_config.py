@@ -208,3 +208,34 @@ def test_unknown_rewriter_raises():
     )
     with pytest.raises(ValueError):
         apply_rewriters(cfg)
+
+
+def test_python_workers_start_through_the_engine_daemon(spark):
+    """Sessions from get_session fork Python workers from
+    samza_spark.worker_daemon, so in a task ``importlib.invalidate_caches()``
+    re-reads no unchanged zip archive (pyspark.zip among them)."""
+    import pandas as pd
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or read_directory(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        importers = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"importers": [importers], "reads": [len(reads)]})
+
+    for _ in range(2):
+        [row] = spark.range(0, 1, 1, 1).mapInPandas(probe, "importers long, reads long").collect()
+    assert row.importers > 0
+    assert row.reads == 0

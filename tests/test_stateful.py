@@ -109,8 +109,8 @@ def test_session_window_batch_panes(spark):
 
 @pytest.mark.parametrize("null_at", [0, 1, 2])
 def test_min_max_skip_null_wherever_it_falls(spark, null_at):
-    """A null value is skipped by min/max (and sum) at any position in the
-    window; count and avg's denominator count the null's row."""
+    """A null value is skipped by min/max, sum and avg at any position in the
+    window; count counts the null's row."""
     spec = Windows.keyed_tumbling_window("k", "t", "1 hour").set_early_trigger(
         Triggers.count(100)  # never fires; single close pane
     )
@@ -119,7 +119,7 @@ def test_min_max_skip_null_wherever_it_falls(spark, null_at):
     rows = [("k", ts(0, i), v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "k string, t timestamp, v double")
     [row] = triggered_window_batch(df, spec, _ALL_OPS).collect()
-    assert (row.n, row.s, row.lo, row.hi, row.a) == (3, 6.0, 1.0, 5.0, 2.0)
+    assert (row.n, row.s, row.lo, row.hi, row.a) == (3, 6.0, 1.0, 5.0, 3.0)
 
 
 class _Capture:
@@ -228,3 +228,23 @@ def test_stream_state_fn_any_chunking_keeps_final_panes(spark, monkeypatch):
         return df[df.is_final][cols].sort_values("window_start").reset_index(drop=True)
 
     pd.testing.assert_frame_equal(finals(stream), finals(replay), check_dtype=False)
+
+
+def test_avg_skips_nulls_and_is_null_over_only_nulls(spark, monkeypatch):
+    """avg divides by its non-null values, as Spark SQL's avg does, in the
+    stream and the replay alike; a pane of only nulls has a null avg."""
+    spec = Windows.keyed_tumbling_window("k", "t", "1 minute").set_accumulation_mode(
+        AccumulationMode.DISCARDING
+    )
+    t0 = pd.Timestamp("2024-01-01 10:00")
+    ev = pd.DataFrame({
+        "k": "k",
+        "t": [t0, t0 + pd.Timedelta(seconds=1), t0 + pd.Timedelta(seconds=2),
+              t0 + pd.Timedelta(minutes=1), t0 + pd.Timedelta(minutes=1, seconds=1)],
+        "v": [1.0, np.nan, 5.0, np.nan, np.nan],
+    })
+    aggs = [AggSpec("n", "count"), AggSpec("s", "sum", "v"), AggSpec("a", "avg", "v")]
+    for panes in _drive(spark, monkeypatch, spec, aggs, [ev.iloc[:2], ev.iloc[2:]]):
+        got = panes.sort_values("window_start")[["n", "s", "a"]].to_numpy().tolist()
+        assert got[0] == [3, 6.0, 3.0]
+        assert got[1][:2] == [2, 0.0] and np.isnan(got[1][2])
