@@ -2,25 +2,37 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
-The metric is the sum of per-query MEDIANS over $SPARK_GRAFT_BENCH_REPEATS
-(default 3) runs each — a single contended run cannot inflate the artifact
-(round-2 recorded a phantom 77% regression from exactly that). The true
-elapsed time is reported separately as ``wall_clock_sec``, and the host
-load average at start/end (``load_avg``) makes a contended run
-self-identifying. Per-query seconds let the judge compare against
-BASELINE.md workloads (#1 stateless passthrough ≈ `passthrough`/`filter`;
-#3/#4 stateful windowed count ≈ `tumbling_window`/`session_window`).
+Each batch sample writes every column of every row of a query to the noop
+sink (``timed_action``). The metric is the sum of per-query MEDIANS over
+$SPARK_GRAFT_BENCH_REPEATS (default 3) runs each — a single contended run
+cannot inflate the artifact (round-2 recorded a phantom 77% regression from
+exactly that). The true elapsed time is reported separately as
+``wall_clock_sec``, and the host load average at start/end (``load_avg``)
+makes a contended run self-identifying. Per-query seconds let the judge
+compare against BASELINE.md workloads (#1 stateless passthrough ≈
+`passthrough`/`filter`; #3/#4 stateful windowed count ≈
+`tumbling_window`/`session_window`).
+
+The functions above :func:`main` — calibration, idle gate, session and
+timed sample — are the measurement harness; ``tools/isolate_time.py``
+times named queries through the same functions.
 """
 
 from __future__ import annotations
 
+import gc
+import glob
 import json
 import os
+import shutil
+import signal
 import statistics
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 # Headline queries: parity core + windows + joins + pipeline ops.
 HEADLINE = [
@@ -337,6 +349,192 @@ HEADLINE = [
 ]
 
 
+# Every timed batch sample writes every column of every row to the noop
+# sink: ``.count()`` lets Catalyst prune whole subtrees (58 of 292 HEADLINE
+# plans shrink under it), so only a noop write measures the work a result
+# needs. The artifact carries this stamp and is compared only against an
+# artifact with the same one.
+TIMED_ACTION = "noop"
+
+
+class QueryTimeout(Exception):
+    """Raised by the SIGALRM handler of :func:`capped`. It derives from
+    ``Exception`` so that py4j, when it interrupts a JVM call, closes that
+    connection; the caller then sees a bare ``Py4JError`` instead."""
+
+
+def cpu_calib_ms(samples: int = 3) -> float:
+    """Single-thread CPU calibration: the best of ``samples`` runs of a fixed
+    pure-Python loop, whose wall time moves 1:1 with hypervisor throttling
+    and steal. Stamped on every artifact so that a result is compared only
+    against a like host."""
+    best = float("inf")
+    for _ in range(samples):
+        t0 = time.perf_counter()
+        s = 0
+        for i in range(5_000_000):
+            s += i
+        best = min(best, time.perf_counter() - t0)
+    return round(best * 1000, 1)
+
+
+def idle_gate() -> tuple[float, tuple, bool]:
+    """Wait up to $SPARK_GRAFT_BENCH_IDLE_WAIT seconds (default 900) for an
+    idle host, then measure anyway. Returns (seconds waited, load average
+    at the end of the wait, whether the gate timed out); a timed-out gate is
+    stamped ``idle_gate_timeout`` so a warm-box run cannot pass as clean.
+
+    A loaded host inflates every sample uniformly (rounds 2 and 4 recorded
+    phantom regressions at load_avg > 3). load1 AND load5 must be below
+    $SPARK_GRAFT_BENCH_IDLE_LOAD (default 1.5): a burst that just ended
+    leaves load1 low but the machine still disturbed (a uniform ~1.6x
+    inflation measured right after a heavy run). load15 must be below twice
+    that: a run that squeaked under the gate at load5 1.49 / load15 2.58
+    reported streaming rows up to 2x below a settled re-run 25 min later.
+    load15 needs ~10 min to decay from a burst, hence the wait budget."""
+    idle_load = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_LOAD", "1.5"))
+    idle_wait = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT", "900"))
+    limits = (idle_load, idle_load, 2 * idle_load)
+
+    def busy(la):
+        return any(x > lim for x, lim in zip(la, limits))
+
+    waited = 0.0
+    la = os.getloadavg()
+    while busy(la) and waited < idle_wait:
+        print(
+            f"# load_avg {la[0]:.2f}/{la[1]:.2f}/{la[2]:.2f} > "
+            f"{limits[0]}/{limits[1]}/{limits[2]}; waiting for idle"
+            f" ({waited:.0f}/{idle_wait:.0f}s)",
+            file=sys.stderr,
+        )
+        time.sleep(10)
+        waited += 10
+        la = os.getloadavg()
+    timed_out = busy(la)
+    if timed_out:
+        print(
+            f"# WARNING idle gate TIMED OUT after {waited:.0f}s — measuring on "
+            f"a warm box (load_avg {la[0]:.2f}/{la[1]:.2f}/{la[2]:.2f}); treat "
+            "regressions in this artifact as suspect",
+            file=sys.stderr,
+        )
+    return waited, la, timed_out
+
+
+def bench_session(cpus: int, app_name: str = "samza_spark_bench", extra=None):
+    """The measuring session: local[cpus], one shuffle partition per core
+    and a $SPARK_GRAFT_BENCH_MEM heap (default 8g). The stock 1g is tight
+    across a 300+-query session on 32 threads (a GCLocker-adjacent heap OOM
+    on an iterative graph op, 176 queries into an otherwise green run);
+    on an idle box the heap does not move timings. The Python workers get
+    this checkout on their path, so a caller may start from any directory."""
+    from samza_spark import SessionConfig, get_session
+
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([ROOT] + paths)
+
+    spark = get_session(
+        SessionConfig(
+            app_name=app_name,
+            master=f"local[{cpus}]",
+            shuffle_partitions=cpus,
+            extra={
+                "spark.driver.memory": os.environ.get("SPARK_GRAFT_BENCH_MEM", "8g"),
+                **(extra or {}),
+            },
+        )
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def capped(fn, cap: int):
+    """Run ``fn()`` under a SIGALRM cap of ``cap`` seconds (0 for none), so
+    one pathological hang costs one sample rather than the whole artifact.
+    Returns (seconds, timed out, fn's result or None); the previous SIGALRM
+    handler is restored either way."""
+    fired = []
+
+    def _raise(_sig, _frm):
+        fired.append(True)
+        raise QueryTimeout()
+
+    result = None
+    old = signal.signal(signal.SIGALRM, _raise)
+    t0 = time.perf_counter()
+    signal.alarm(max(cap, 0))
+    try:
+        result = fn()
+    except Exception:
+        # py4j swallows the interrupt of a JVM call and raises its own
+        # error, so whether the cap fired is read from the handler
+        if not fired:
+            raise
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+    return time.perf_counter() - t0, bool(fired), result
+
+
+def timed_sample(spark, name: str, sf_dir: str):
+    """One timed sample of query ``name``: the DataFrame is built and every
+    column of every row written to the noop sink, under :func:`capped` with
+    $SPARK_GRAFT_BENCH_QUERY_TIMEOUT seconds (default 180). A capped
+    sample's jobs are cancelled and it is recorded at the cap. Returns
+    (seconds, timed out, the DataFrame or None).
+
+    Every sample starts with an empty DataFrame cache: operators that
+    persist intermediates register them in the CacheManager, which matches
+    by analysed plan, so a repeat of the query would re-read the previous
+    sample's cache. localCheckpoint blocks (CC / pagerank / LPA lineage
+    cuts) are released only when the driver garbage-collects their Python
+    references; without a driver gc per sample they pile up in the block
+    manager across a suite (minhash_pairs measured 34.9 s in-suite against
+    13.5 s isolated on the same idle host)."""
+    from samza_spark.queries import QUERIES
+
+    cap = int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_TIMEOUT", "180"))
+    spark.catalog.clearCache()
+    gc.collect()
+
+    def run():
+        df = QUERIES[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return df
+
+    secs, timed_out, df = capped(run, cap)
+    if timed_out:
+        spark.sparkContext.cancelAllJobs()
+        print(f"# {name}: TIMED OUT at {cap}s", file=sys.stderr)
+    return secs, timed_out, df
+
+
+def _prev_artifact(repo_dir: str, sf, cpus: int):
+    """The newest ``BENCH_r*.json`` artifact of the same ``sf``,
+    ``cpus`` and :data:`TIMED_ACTION` as (file name, its stdout line), or
+    (None, None). Another scale, core count or timed action measures
+    different work, so nothing is compared against it."""
+    for p in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")))[::-1]:
+        try:
+            with open(p) as fh:
+                art = json.load(fh)
+            tail = art.get("tail", "")
+            i = tail.rfind('{"metric"')
+            obj = json.loads(tail[i:]) if i >= 0 else None
+        except (OSError, ValueError):
+            continue
+        if (
+            obj and obj.get("cpu_calib_ms") and obj.get("streaming")
+            and art.get("cpus") == cpus and art.get("sf") == sf
+            # artifacts from before the stamp were timed with .count()
+            and obj.get("timed_action", "count") == TIMED_ACTION
+        ):
+            return os.path.basename(p), obj
+    return None, None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -370,96 +568,16 @@ def main() -> None:
             return 1
         return n
 
-    # Contention guard: a loaded host inflates every sample uniformly
-    # (rounds 2 and 4 both recorded phantom regressions with load_avg > 3
-    # stamped in the artifact itself). Spin-wait for the 1-minute load to
-    # drop below the threshold before measuring — bounded, so a driver on
-    # a busy box still gets an artifact (the stamp then self-identifies).
-    idle_load = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_LOAD", "1.5"))
-    # r10 (VERDICT r9 what's-wrong #1): the r9 driver run exhausted the
-    # 300 s cap and benched anyway at load15 3.44 — four audit-tier rows
-    # recorded 15-35% phantom regressions. load15 needs ~10 min to decay
-    # from a burst by construction, so the wait budget now covers a full
-    # load15 half-life; and a timed-out gate is stamped in the artifact
-    # (idle_gate_timeout) so a warm-box run can never masquerade as clean.
-    idle_wait = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT", "900"))
-    waited = 0.0
-    # gate on the 5-minute average too: a burst that just finished leaves
-    # load1 low but the machine still cache/IO-disturbed (this session
-    # measured a uniform ~1.6x inflation benching right after a heavy run).
-    # The load5 threshold is the SAME idle_load as load1 — the r6 driver run
-    # started at load5 2.14 under the old 2x threshold (3.0) and recorded
-    # uniformly slower streaming medians; load5 decays slowly, hence the
-    # longer default wait budget. r8 measured the residual failure mode:
-    # a run that squeaked under the gate at load5 1.49 / load15 2.58
-    # (30 min of gate+pytest churn just ended) reported streaming rows up
-    # to 2x below a settled re-run 25 min later — so the gate also holds
-    # for load15 < 2*idle_load (post-burst machine state: writeback, JVM
-    # teardown, frequency/thermal recovery; data is only 17 MB, so it is
-    # NOT page cache).
-    while (
-        os.getloadavg()[0] > idle_load
-        or os.getloadavg()[1] > idle_load
-        or os.getloadavg()[2] > 2 * idle_load
-    ) and waited < idle_wait:
-        la = os.getloadavg()
-        print(
-            f"# load_avg {la[0]:.2f}/{la[1]:.2f}/{la[2]:.2f}"
-            f" > {idle_load}/{idle_load}/{2 * idle_load}; waiting for idle"
-            f" ({waited:.0f}/{idle_wait:.0f}s)",
-            file=sys.stderr,
-        )
-        time.sleep(10)
-        waited += 10
-    load_start = os.getloadavg()
-    idle_gate_timeout = bool(
-        load_start[0] > idle_load
-        or load_start[1] > idle_load
-        or load_start[2] > 2 * idle_load
-    )
-    if idle_gate_timeout:
-        print(
-            f"# WARNING idle gate TIMED OUT after {waited:.0f}s — benching "
-            f"on a warm box (load_avg {load_start[0]:.2f}/{load_start[1]:.2f}"
-            f"/{load_start[2]:.2f}); treat regressions in this artifact as "
-            "suspect",
-            file=sys.stderr,
-        )
+    waited, load_start, idle_gate_timeout = idle_gate()
+    # calibration is sampled at the START and END of the suite: one
+    # start-of-run sample mispredicts a box whose load changes mid-suite
+    # (BENCH_r10 gated clean, then ended at load 8.35 with the slowest
+    # calib on record)
+    calib_start_ms = cpu_calib_ms()
 
-    # single-thread CPU calibration probe, sampled at START and END of
-    # the suite (r10 verdict what's-wrong #2: one start-of-run sample
-    # mispredicts a box whose load changes mid-suite — BENCH_r10 gated
-    # clean, then ended at load 8.35 with the slowest calib on record).
-    # A fixed pure-Python loop whose wall time moves 1:1 with hypervisor
-    # throttling/steal; min-of-3 per sample point.
-    def _cpu_calib_ms() -> float:
-        t0 = time.perf_counter()
-        s = 0
-        for i in range(5_000_000):
-            s += i
-        return round((time.perf_counter() - t0) * 1000, 1)
-
-    calib_start_ms = min(_cpu_calib_ms() for _ in range(3))
-
-    from samza_spark import SessionConfig, get_session
     from samza_spark.catalog import normalize_event_ts
 
-    # a real heap for the single local JVM standing in for a cluster's
-    # executors: the stock 1g is tight across a 300+-query session on 32
-    # threads (observed in the r10 gate: GCLocker-adjacent heap OOM on an
-    # iterative graph op under Arrow JNI critical sections, 176 queries
-    # into an otherwise-green run). Timings are unaffected on an idle
-    # box — the heap only removes a flakiness mode from the artifact.
-    mem = os.environ.get("SPARK_GRAFT_BENCH_MEM", "8g")
-    spark = get_session(
-        SessionConfig(
-            app_name="samza_spark_bench",
-            master=f"local[{cpus}]",
-            shuffle_partitions=cpus,
-            extra={"spark.driver.memory": mem},
-        )
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session(cpus)
 
     from samza_spark.queries import QUERIES
 
@@ -491,45 +609,15 @@ def main() -> None:
     # most one of each query's samples, which the median discards —
     # consecutive repeats let a ~30s burst own all three samples of one
     # query (observed: minhash_pairs 7.6s recorded vs 3.5s isolated)
-    # every timed sample starts with an empty DataFrame cache: operators
-    # that persist intermediates (similarity_join, jaccard_verify) register
-    # them in the CacheManager, which matches by analyzed PLAN — a repeat of
-    # the identical query would silently re-read the previous sample's cache
-    # and the median would measure cache hits, not computation. (OS page
-    # cache / parquet footers stay warm — that's storage warmth, fine.)
-    # per-query watchdog: one pathological hang must cost one sample, not
-    # the whole artifact (SIGALRM interrupts the py4j wait; the sample is
-    # recorded at the cap and the run continues)
-    import signal
-
-    query_cap = int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_TIMEOUT", "180"))
-
-    class _QueryTimeout(Exception):
-        pass
-
-    def _timed_count(name):
-        def _raise(_sig, _frm):
-            raise _QueryTimeout()
-
-        old = signal.signal(signal.SIGALRM, _raise)
-        signal.alarm(query_cap)
-        try:
-            return QUERIES[name](spark, sf_dir).count()
-        finally:
-            signal.alarm(0)
-            signal.signal(signal.SIGALRM, old)
-
-    # clearCache drops DataFrame cache entries, but localCheckpoint RDD
-    # blocks (CC / pagerank / LPA lineage cuts) are only released when the
-    # DRIVER garbage-collects the Python references and the ContextCleaner
-    # runs — across a 240-workload suite they otherwise accumulate in the
-    # block manager and inflate late-suite samples (observed: minhash_pairs
-    # 34.9s in-suite vs 13.5s isolated on the same idle host). A per-sample
-    # driver gc.collect() keeps the block manager near-empty.
-    import gc
-
     all_samples: dict[str, list] = {name: [] for name in HEADLINE}
-    rows: dict[str, int] = {}
+    timeouts: dict[str, int] = {}
+
+    def sample(name):
+        secs, timed_out, _ = timed_sample(spark, name, sf_dir)
+        all_samples[name].append(secs)
+        if timed_out:
+            timeouts[name] = timeouts.get(name, 0) + 1
+
     for pass_i in range(repeats):
         for name in HEADLINE:
             # budget: passes beyond the first are optional once the soft
@@ -537,15 +625,7 @@ def main() -> None:
             if pass_i > 0 and past_soft_deadline():
                 budget_stats["passes_skipped"] += 1
                 continue
-            spark.catalog.clearCache()
-            gc.collect()
-            t0 = time.perf_counter()
-            try:
-                rows[name] = QUERIES[name](spark, sf_dir).count() if query_cap <= 0 else _timed_count(name)
-            except _QueryTimeout:
-                rows[name] = -1
-                print(f"# {name}: TIMED OUT at {query_cap}s", file=sys.stderr)
-            all_samples[name].append(time.perf_counter() - t0)
+            sample(name)
     # a query whose samples spread more than 2x its median caught a
     # contention burst in >1 pass — take extra samples so the median
     # reflects steady state, not the burst
@@ -568,84 +648,92 @@ def main() -> None:
                 file=sys.stderr,
             )
             for _ in range(resamples):
-                spark.catalog.clearCache()
-                gc.collect()
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).count()
-                samples.append(time.perf_counter() - t0)
+                sample(name)
     per_query: dict[str, float] = {}
     for name in HEADLINE:
         samples = all_samples[name]
         per_query[name] = round(statistics.median(samples), 3)
         print(
             f"# {name}: median {per_query[name]:.3f}s of "
-            f"{[round(s, 3) for s in samples]} ({rows[name]} rows)",
+            f"{[round(s, 3) for s in samples]}",
             file=sys.stderr,
         )
 
     # Streaming workloads mirroring BASELINE.md #1 (read->write passthrough
-    # throughput) and #3/#4 (stateful windowed count). Structured Streaming
-    # file source, AvailableNow trigger (bounded replay of the whole table),
-    # memory sink — the Spark analog of the reference's
+    # throughput) and #3/#4 (stateful windowed count): Structured Streaming
+    # file sources, AvailableNow trigger (bounded replay of the input), noop
+    # sink — the Spark analog of the reference's
     # kafka-read-write-performance and stateful-window jobs.
-    from pyspark.sql import functions as F
-
     events_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     n_events = events_raw.count()
     schema = events_raw.schema
     streaming = {}
 
-    def run_stream(name, build, state_partitions=None):
-        # stateful micro-batches pay per-partition state-store init; size the
-        # state partition count to the workload, not the CPU count
-        if state_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    def run_sustained(name, start_query, msgs, reps=repeats, state_partitions=None):
+        """Median seconds of ``reps`` runs of a streaming query to its end,
+        recorded as ``per_query[name]``. Stateful micro-batches pay
+        per-partition state-store init, so their state partition count
+        (fixed when the query starts) is sized to the workload, not the CPU
+        count. Median-of-reps like the batch queries: the first run in a
+        session pays one-time sink/WAL/codegen init (~2.4s vs 1.3s warm
+        measured at sf0.1), and a single sample is contention-exposed."""
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions or cpus))
         samples = []
-        for i in range(budgeted_reps(repeats)):
-            # glob form: the file stream source requires a directory/glob path
-            src = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
-            src = normalize_event_ts(src)
-            t0 = time.perf_counter()
-            q = (
-                build(src)
-                .writeStream.format("memory")
-                .queryName(f"bench_{name}_{i}")
-                .outputMode("append" if name == "stream_passthrough" else "complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            samples.append(time.perf_counter() - t0)
+        try:
+            for _ in range(budgeted_reps(reps)):
+                t0 = time.perf_counter()
+                start_query().awaitTermination()
+                samples.append(time.perf_counter() - t0)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
         secs = round(statistics.median(samples), 3)
         per_query[name] = secs
-        streaming[name + "_msgs_per_sec"] = round(n_events / secs)
         print(
-            f"# {name}: median {secs:.3f}s of {[round(s, 3) for s in samples]} "
-            f"({n_events} msgs)",
+            f"# {name}: median {secs:.3f}s of {[round(s, 3) for s in samples]}"
+            f" ({msgs} msgs)",
             file=sys.stderr,
         )
-        if state_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
+        return secs
 
-    run_stream(
+    def to_noop(df, mode="append"):
+        return (
+            df.writeStream.format("noop")
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    def events_stream():
+        # glob form: the file stream source requires a directory/glob path
+        return normalize_event_ts(
+            spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
+        )
+
+    secs = run_sustained(
         "stream_passthrough",
-        lambda s: s.filter(F.col("event_type") != "").select("event_id", "user_id", "event_type"),
+        lambda: to_noop(
+            events_stream()
+            .filter(F.col("event_type") != "")
+            .select("event_id", "user_id", "event_type")
+        ),
+        n_events,
     )
-    run_stream(
+    streaming["stream_passthrough_msgs_per_sec"] = round(n_events / secs)
+    secs = run_sustained(
         "stream_window_count",
-        lambda s: s.groupBy(
-            "event_type", F.window("ts", "1 hour")
-        ).count(),
+        lambda: to_noop(
+            events_stream().groupBy("event_type", F.window("ts", "1 hour")).count(),
+            "complete",
+        ),
+        n_events,
         state_partitions=8,
     )
+    streaming["stream_window_count_msgs_per_sec"] = round(n_events / secs)
 
     # Sustained replay at the reference workload size (BASELINE.md #1 runs
     # 1M messages through one container): replicate events to ~1M rows
     # across 10 files (setup untimed), then stream them through a
     # multi-batch AvailableNow passthrough.
-    import shutil
-    import tempfile
-
     replay_dir = tempfile.mkdtemp(prefix="bench_replay_")
     try:
         replicas = max(1, 1_000_000 // max(n_events, 1))
@@ -655,39 +743,21 @@ def main() -> None:
             ).write.mode("overwrite" if i == 0 else "append").parquet(replay_dir)
         n_replay = replicas * n_events
 
-        def run_sustained(name, start_query, reps=repeats):
-            # median-of-reps like the batch queries: the first sustained
-            # run in a session pays one-time sink/WAL/codegen init (~2.4s
-            # vs 1.3s warm measured at sf0.1), and a single-shot number
-            # is also contention-exposed — exactly what medians fix.
-            samples = []
-            for _ in range(budgeted_reps(reps)):
-                t0 = time.perf_counter()
-                q = start_query()
-                q.awaitTermination()
-                samples.append(time.perf_counter() - t0)
-            secs = round(statistics.median(samples), 3)
-            per_query[name] = secs
-            print(
-                f"# {name}: median {secs:.3f}s of {[round(s, 3) for s in samples]}"
-                f" ({n_replay} msgs)",
-                file=sys.stderr,
+        def replay(batches):
+            """The replay as a stream of about ``batches`` micro-batches."""
+            return (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", max(1, replicas // batches))
+                .parquet(replay_dir)
             )
-            return secs
+
+        def passthrough(df):
+            return df.filter(F.col("event_type") != "").select(
+                "event_id", "user_id", "event_type"
+            )
 
         secs = run_sustained(
-            "stream_sustained_1m",
-            lambda: (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", max(1, replicas // 5))
-                .parquet(replay_dir)
-                .filter(F.col("event_type") != "")
-                .select("event_id", "user_id", "event_type")
-                .writeStream.format("noop")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            ),
+            "stream_sustained_1m", lambda: to_noop(passthrough(replay(5))), n_replay
         )
         streaming["stream_sustained_msgs_per_sec"] = round(n_replay / secs)
         streaming["stream_sustained_messages"] = n_replay
@@ -699,40 +769,26 @@ def main() -> None:
         # above is kept for round-over-round comparability.
         secs = run_sustained(
             "stream_sustained_1m_tuned",
-            lambda: (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", max(1, replicas // 2))
-                .parquet(replay_dir)
-                .filter(F.col("event_type") != "")
-                .select("event_id", "user_id", "event_type")
-                .writeStream.format("noop")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            ),
+            lambda: to_noop(passthrough(replay(2))),
+            n_replay,
         )
         streaming["stream_sustained_tuned_msgs_per_sec"] = round(n_replay / secs)
 
         # the stateful counterpart (BASELINE.md #3/#4: windowed counts with
         # durable state) over the same 1M-message replay
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         secs = run_sustained(
             "stream_sustained_window_1m",
-            lambda: (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", max(1, replicas // 5))
-                .parquet(replay_dir)
+            lambda: to_noop(
+                replay(5)
                 .transform(normalize_event_ts)
                 .withWatermark("ts", "1 hour")
                 .groupBy("event_type", F.window("ts", "1 hour"))
-                .count()
-                .writeStream.format("noop")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
+                .count(),
+                "update",
             ),
+            n_replay,
+            state_partitions=8,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
         streaming["stream_sustained_window_msgs_per_sec"] = round(n_replay / secs)
 
         # sustained stream-stream TTL join over the same replay — the
@@ -743,19 +799,15 @@ def main() -> None:
         # of state, every left row meets exactly its right twin (1:1,
         # the ad click/impression-join benchmark shape). Throughput
         # counts BOTH consumed sides, like the reference's consumed-msgs
-        # metric. 8 state partitions measured best in the r8 profile
-        # (tools/profile_ttl_join.py): state-store commitTimeMs dominates
+        # metric. 8 state partitions measured best (PERF.md, "Round 8 —
+        # TTL-join breakdown"): state-store commitTimeMs dominates
         # this workload and grows super-linearly with the partition count
         # (7s task-time at 8 parts vs 86s at 16 vs 167s at 32 for the
         # same 1M-row state) — the old parts=16 setting was leaving ~3x
         # on the table (130k -> 376-394k msg/s warm).
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-
         def join_side(prefix):
             return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", max(1, replicas // 2))
-                .parquet(replay_dir)
+                replay(2)
                 .transform(normalize_event_ts)
                 .select(
                     F.col("event_id").alias(f"{prefix}_id"),
@@ -767,27 +819,23 @@ def main() -> None:
 
         secs = run_sustained(
             "stream_sustained_join_1m",
-            lambda: (
-                join_side("l")
-                .join(
+            lambda: to_noop(
+                join_side("l").join(
                     join_side("r"),
                     (F.col("l_id") == F.col("r_id"))
                     & (F.col("r_ts") >= F.col("l_ts") - F.expr("INTERVAL 10 MINUTES"))
                     & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 10 MINUTES")),
                     "inner",
                 )
-                .writeStream.format("noop")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
             ),
+            2 * n_replay,
             # 3 samples so the median is the middle run: the first run
             # pays one-time state-store/codegen init (r8 profile measured
             # cold 130k vs warm 390k msg/s on identical config) and a
             # median-of-2 averages that cold start into the artifact
             reps=min(3, repeats),
+            state_partitions=8,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
         streaming["stream_sustained_join_msgs_per_sec"] = round(2 * n_replay / secs)
         streaming["stream_sustained_join_messages"] = 2 * n_replay
 
@@ -797,26 +845,20 @@ def main() -> None:
         # watermark-bounded; the pipeline.dedup.streaming_dedup path).
         # 8 state partitions for the same commit-cost reason as the TTL
         # join (r8 profile: warm 564k msg/s at 8 parts vs 456k at 16).
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         secs = run_sustained(
             "stream_sustained_dedup_1m",
-            lambda: (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", max(1, replicas // 2))
-                .parquet(replay_dir)
+            lambda: to_noop(
+                replay(2)
                 .transform(normalize_event_ts)
                 .withWatermark("ts", "30 minutes")
                 .dropDuplicatesWithinWatermark(["event_id"])
                 .select("event_id", "user_id", "event_type")
-                .writeStream.format("noop")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
             ),
+            n_replay,
             # 3 reps: median = warm middle run, same rationale as the join
             reps=min(3, repeats),
+            state_partitions=8,
         )
-        spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
         streaming["stream_sustained_dedup_msgs_per_sec"] = round(n_replay / secs)
 
         # sustained DURABLE write through the transactional log producer
@@ -833,9 +875,7 @@ def main() -> None:
             _rep_seq[0] += 1
             dst = os.path.join(sink_root, str(_rep_seq[0]))
             return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", max(1, replicas // 2))
-                .parquet(replay_dir)
+                replay(2)
                 .select(
                     F.col("event_id").cast("string").alias("key"),
                     F.col("event_type").alias("value"),
@@ -849,9 +889,7 @@ def main() -> None:
             )
 
         try:
-            secs = run_sustained(
-                "stream_sustained_log_sink_1m", start_log_sink, reps=repeats
-            )
+            secs = run_sustained("stream_sustained_log_sink_1m", start_log_sink, n_replay)
         finally:
             shutil.rmtree(sink_root, ignore_errors=True)
         streaming["stream_sustained_log_sink_msgs_per_sec"] = round(
@@ -878,30 +916,11 @@ def main() -> None:
                 u = streams[0]
                 for s in streams[1:]:
                     u = u.unionByName(s)
-                return (
-                    u.select("event_id", "user_id", "event_type")
-                    .writeStream.format("noop")
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
+                return to_noop(u.select("event_id", "user_id", "event_type"))
 
-            samples = []
-            for _ in range(budgeted_reps(repeats)):
-                t0 = time.perf_counter()
-                q = fan_in_query()
-                q.awaitTermination()
-                samples.append(time.perf_counter() - t0)
-            secs = round(statistics.median(samples), 3)
-            per_query["stream_fan_in_64"] = secs
+            secs = run_sustained("stream_fan_in_64", fan_in_query, n_events)
             streaming["stream_fan_in_streams"] = n_streams
             streaming["stream_fan_in_msgs_per_sec"] = round(n_events / secs)
-            print(
-                f"# stream_fan_in_64: median {secs:.3f}s of "
-                f"{[round(s, 3) for s in samples]} ({n_events} msgs, "
-                f"{n_streams} streams)",
-                file=sys.stderr,
-            )
 
             # scale-safe fan-in shape (VERDICT r5 next #5): the SAME
             # messages consumed as ONE source over the partitioned
@@ -916,33 +935,18 @@ def main() -> None:
             )
 
             def fan_in_one_source_query():
-                return (
+                return to_noop(
                     spark.readStream.schema(shard_schema)
                     .option("basePath", fan_dir)
                     .parquet(f"{fan_dir}/shard=*")
                     .select("event_id", "user_id", "event_type")
-                    .writeStream.format("noop")
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
                 )
 
-            samples = []
-            for _ in range(budgeted_reps(repeats)):
-                t0 = time.perf_counter()
-                q = fan_in_one_source_query()
-                q.awaitTermination()
-                samples.append(time.perf_counter() - t0)
-            secs = round(statistics.median(samples), 3)
-            per_query["stream_fan_in_partitioned"] = secs
+            secs = run_sustained(
+                "stream_fan_in_partitioned", fan_in_one_source_query, n_events
+            )
             streaming["stream_fan_in_partitioned_msgs_per_sec"] = round(
                 n_events / secs
-            )
-            print(
-                f"# stream_fan_in_partitioned: median {secs:.3f}s of "
-                f"{[round(s, 3) for s in samples]} ({n_events} msgs, "
-                f"1 source over {n_streams} shards)",
-                file=sys.stderr,
             )
         finally:
             shutil.rmtree(fan_dir, ignore_errors=True)
@@ -955,11 +959,9 @@ def main() -> None:
     # engine's store is the DurableLocalTable parquet changelog; writes
     # here are full durable upserts (changelog append + state update),
     # the same path .properties stores and sendTo(table) use.
-    import tempfile as _tf
-
     from samza_spark.tables.local import DurableLocalTable
 
-    kv_root = _tf.mkdtemp(prefix="bench_kv_")
+    kv_root = tempfile.mkdtemp(prefix="bench_kv_")
     try:
         n_kv = int(os.environ.get("SPARK_GRAFT_BENCH_KV_MSGS", "1000000"))
         payload = spark.range(n_kv).select(
@@ -967,12 +969,11 @@ def main() -> None:
             F.concat(F.lit("v" * 248), F.col("id").cast("string")).alias("v"),
         )
         payload = payload.localCheckpoint()  # time the store, not the generator
-        # median of `repeats` fresh-store runs: r9 profiling
-        # (tools/profile_kv_write.py) measured the FIRST durable write
-        # of a session at ~4x the settled cost (codegen/JIT + cold write
-        # path: 2.36s vs 0.49s on an idle host) — a single sample lands
-        # anywhere in that band depending on what ran before it, which
-        # is exactly the r7->r8 748k->585k "regression" (PERF.md r9).
+        # median of `repeats` fresh-store runs: the FIRST durable write
+        # of a session measured ~4x the settled cost (codegen/JIT + cold
+        # write path: 2.36s vs 0.49s on an idle host; PERF.md, "Round 9 —
+        # kv_store_write 748k→585k attributed") — a single sample lands
+        # anywhere in that band depending on what ran before it.
         kv_samples = []
         for i in range(budgeted_reps(max(repeats, 2))):
             t0 = time.perf_counter()
@@ -1042,12 +1043,12 @@ def main() -> None:
     # recovery does not. Query timing is untouched.
     spark.stop()
     time.sleep(3)
-    calib_end_ms = min(_cpu_calib_ms() for _ in range(3))
+    calib_end_ms = cpu_calib_ms()
     for _ in range(12):
         if calib_end_ms <= calib_start_ms * 1.15:
             break
         time.sleep(5)
-        calib_end_ms = min(calib_end_ms, _cpu_calib_ms())
+        calib_end_ms = min(calib_end_ms, cpu_calib_ms(1))
     calib_drift_pct = round(
         100.0
         * abs(calib_end_ms - calib_start_ms)
@@ -1055,15 +1056,13 @@ def main() -> None:
         1,
     )
     meta = {
+        "timed_action": TIMED_ACTION,
         "cpu_calib_ms": min(calib_start_ms, calib_end_ms),
         "cpu_calib_start_ms": calib_start_ms,
         "cpu_calib_end_ms": calib_end_ms,
         "calib_drift_pct": calib_drift_pct,
         "calib_drift_flag": calib_drift_pct >= 15.0,
         "repeats": repeats,
-        # short stamp on stdout (the driver keeps a ~2 KB tail — the full
-        # per-phase budget_stats go to BENCH_FULL.json below)
-        "budget_sec": budget_sec,
         "budget_truncated": any(v > 0 for v in budget_stats.values()),
         "waited_for_idle_sec": round(waited, 1),
         "idle_gate_timeout": idle_gate_timeout,
@@ -1075,34 +1074,14 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
 
-    # calib-normalized comparison against the newest prior driver artifact
-    # of the same sf and cpus (VERDICT r7 next #3): for each shared
-    # streaming rate, the prior median scaled by calib_prev/calib_now is
-    # this host's EXPECTATION; only deviations from THAT are genuine
-    # deltas. Another scale or core count is a different workload, so
-    # without a like artifact nothing is compared. Full table goes to
-    # BENCH_FULL.json; stdout carries ratio + >=15% flags only.
-    def _prev_artifact(repo_dir, sf, cpus):
-        import glob
-
-        for p in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")))[::-1]:
-            try:
-                art = json.load(open(p))
-                tail = art.get("tail", "")
-                i = tail.rfind('{"metric"')
-                obj = json.loads(tail[i:]) if i >= 0 else None
-                if (
-                    obj and obj.get("cpu_calib_ms") and obj.get("streaming")
-                    and art.get("cpus") == cpus and art.get("sf") == sf
-                ):
-                    return os.path.basename(p), obj
-            except (OSError, ValueError):
-                continue
-        return None, None
-
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prev_name, prev = _prev_artifact(repo_dir, meta["sf"], cpus)
-    norm_full, norm_flags = None, None
+    # calib-normalized comparison against the newest prior artifact of
+    # the same sf, cpus and timed action (VERDICT r7 next #3): for each
+    # shared streaming rate, the prior median scaled by calib_prev/calib_now
+    # is this host's EXPECTATION; only deviations from THAT are genuine
+    # deltas. Full table goes to BENCH_FULL.json; stdout carries ratio +
+    # >=15% flags only.
+    prev_name, prev = _prev_artifact(ROOT, meta["sf"], cpus)
+    norm_full = None
     if prev:
         # >1 means this host is faster than the prior artifact's host
         ratio = prev["cpu_calib_ms"] / meta["cpu_calib_ms"]
@@ -1149,25 +1128,22 @@ def main() -> None:
                 if abs(r["delta_pct"]) >= 15.0
             ),
             key=lambda kv: -abs(kv[1]),
-        )[:5]  # stdout stays under the driver's ~2 KB tail (the three
-        # r11 calib stamps cost ~90 bytes; one fewer flag pays for them)
-        norm_flags = {
+        )[:5]  # stdout stays under a ~2 KB tail
+        meta["calib_norm"] = {
             "vs": prev_name,
             "calib_ratio": round(ratio, 3),
             "flags": dict(flagged),
         }
-        meta["calib_norm"] = norm_flags
 
     # Full per-query record -> a FILE; the final stdout line stays compact.
-    # The driver keeps only a ~2,000-char stdout tail, so a 240-entry
-    # "queries" dict on stdout silently truncates the graded artifact
+    # A consumer that keeps only a ~2,000-char stdout tail would truncate
+    # a 300-entry "queries" dict on stdout
     # (BENCH_r06 recorded "parsed": null for exactly this reason —
-    # VERDICT r6 next #3). BENCH_FULL.json carries every batch median;
-    # stdout carries the BASELINE.md-comparable headline subset + suite
-    # summary stats + a pointer.
+    # VERDICT r6 next #3). BENCH_FULL.json carries every batch median,
+    # the budget and the timed-out samples; stdout carries the
+    # BASELINE.md-comparable headline subset + suite summary stats.
     full_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_FULL_PATH",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"),
+        "SPARK_GRAFT_BENCH_FULL_PATH", os.path.join(ROOT, "BENCH_FULL.json")
     )
     with open(full_path, "w") as fh:
         json.dump(
@@ -1178,7 +1154,9 @@ def main() -> None:
                 "queries": per_query,
                 "streaming": streaming,
                 "calib_normalized": norm_full,
+                "budget_sec": budget_sec,
                 "budget_stats": budget_stats,
+                "timeouts": timeouts,
                 **meta,
             },
             fh,
@@ -1202,6 +1180,7 @@ def main() -> None:
         "batch_p90": round(batch_medians[(len(batch_medians) * 9) // 10], 3),
         "batch_max": round(batch_medians[-1], 3),
         "batch_max_query": max(HEADLINE, key=lambda n: per_query[n]),
+        "timeouts": sum(timeouts.values()),
     }
     print(
         json.dumps(
@@ -1212,7 +1191,6 @@ def main() -> None:
                 "queries": {n: per_query[n] for n in core if n in per_query},
                 "streaming": streaming,
                 "suite": suite,
-                "full_results": os.path.basename(full_path),
                 **meta,
             },
             separators=(",", ":"),

@@ -1,43 +1,94 @@
 #!/usr/bin/env python3
-"""Isolated per-query timing with the noop sink (guide §1.4).
+"""Isolated per-query timing and execution shape, through bench.py's
+measurement harness.
 
-Times ONLY the computation of named queries — every column of every row
-is computed and discarded via ``format("noop")`` — with bench.py's
-hygiene (idle-gate check, clearCache + driver gc per sample, median of N
-fresh samples, one untimed warm-up pass). Used for before/after evidence
-of single-operator optimizations and settled re-runs of bench rows;
-bench.py's ``.count()`` timing stays the cross-round comparable
-artifact. The JSON carries the start/end load averages and bench.py's
-single-thread ``cpu_calib_ms`` stamp, so a result is compared only
-against a like host.
+Each named query gets one untimed warm-up sample, then N samples of
+``bench.timed_sample`` (clearCache + driver gc, the SIGALRM cap, every
+column of every row written to the noop sink — guide §1.4); the median is
+reported. The last sample's execution shape comes with it: Spark jobs,
+stages, tasks and shuffle read/write bytes (from the Spark UI), and the
+ArrowEvalPython / BatchEvalPython / Exchange node counts of its physical
+plan. The shape does not move with host speed, so it is before/after
+evidence on a box whose timing drifts.
+
+The host check is bench.py's: wait for an idle box up to
+$SPARK_GRAFT_BENCH_IDLE_WAIT seconds (0 measures at once), then stamp
+``idle_gate_timeout``; the JSON also carries ``cpu_calib_ms`` and the
+start/end load averages, so a result is compared only against a like host.
+A scaling slope is this tool run once per scale with $SPARK_GRAFT_SF_DIR
+pointed at each (``tools/gen_scale_data.py`` makes sf0.5 and sf1).
 
 Usage: python tools/isolate_time.py name [name ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
-     SPARK_GRAFT_BENCH_REPEATS (default 5), SPARK_GRAFT_IDLE_SKIP=1 to
-     skip the idle assertion (contended A/B where both sides share the
-     same contention), SPARK_GRAFT_EXTRA_CONF="k=v;k=v" to inject extra
-     Spark confs for conf-level A/B experiments (recorded in the JSON).
+     SPARK_GRAFT_BENCH_REPEATS (default 5), SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
+     to inject extra Spark confs for conf-level A/B experiments (recorded in
+     the JSON), and bench.py's SPARK_GRAFT_BENCH_IDLE_WAIT,
+     SPARK_GRAFT_BENCH_MEM and SPARK_GRAFT_BENCH_QUERY_TIMEOUT.
 """
 
 from __future__ import annotations
 
-import gc
+import io
 import json
 import os
+import re
 import statistics
 import sys
 import time
+from contextlib import redirect_stdout
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+
+import bench  # noqa: E402
+from perfbench.measure import next_job_id, spark_totals  # noqa: E402
+
+PLAN_NODES = {
+    "plan_arrow_eval_python": "ArrowEvalPython",
+    "plan_batch_eval_python": "BatchEvalPython",
+    "plan_exchanges": "Exchange",
+}
 
 
-def _cpu_calib_ms() -> float:
-    """bench.py's single-thread calibration: a fixed pure-Python loop."""
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(5_000_000):
-        s += i
-    return round((time.perf_counter() - t0) * 1000, 1)
+def _settled_totals(spark, first_job: int):
+    """``spark_totals`` once the UI has recorded the end of every job from
+    ``first_job`` on (for at most 5 s): the status listener runs behind the
+    driver."""
+    deadline = time.monotonic() + 5.0
+    while True:
+        totals, jobs, stages = spark_totals(spark, first_job)
+        if time.monotonic() > deadline or all(j["status"] != "RUNNING" for j in jobs):
+            return totals, stages
+        time.sleep(0.1)
+
+
+def time_query(spark, name: str, sf_dir: str, repeats: int) -> dict:
+    """Median and samples of ``repeats`` timed samples of query ``name``
+    after one untimed warm-up, with the last sample's execution shape."""
+    bench.timed_sample(spark, name, sf_dir)
+    samples, timeouts = [], 0
+    for _ in range(max(repeats, 1)):
+        first_job = next_job_id(spark)
+        secs, timed_out, df = bench.timed_sample(spark, name, sf_dir)
+        samples.append(secs)
+        timeouts += timed_out
+    totals, stages = _settled_totals(spark, first_job)
+    out = {
+        "median_sec": round(statistics.median(samples), 3),
+        "samples": [round(s, 3) for s in samples],
+        "timeouts": timeouts,
+        "jobs": int(totals["spark.jobs"]),
+        "stages": len(stages),
+        "tasks": int(totals["spark.tasks"]),
+        "shuffle_read_bytes": int(totals["spark.shuffle_read_bytes"]),
+        "shuffle_write_bytes": int(totals["spark.shuffle_write_bytes"]),
+    }
+    if df is not None:
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        for key, op in PLAN_NODES.items():
+            out[key] = len(re.findall(rf"^\(\d+\) {op}", buf.getvalue(), re.M))
+    return out
 
 
 def main() -> int:
@@ -48,64 +99,29 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
-    la = os.getloadavg()
-    if not os.environ.get("SPARK_GRAFT_IDLE_SKIP"):
-        if la[0] > 1.5 or la[1] > 1.5:
-            print(
-                f"ERROR box not idle: load {la[0]:.2f}/{la[1]:.2f} — "
-                "isolated numbers on a warm box prove nothing "
-                "(SPARK_GRAFT_IDLE_SKIP=1 to override)",
-                file=sys.stderr,
-            )
-            return 3
-
-    from samza_spark import SessionConfig, get_session
-
-    extra = {"spark.driver.memory": os.environ.get(
-        "SPARK_GRAFT_BENCH_MEM", "8g")}
+    waited, load_start, gate_timeout = bench.idle_gate()
     extra_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
+    extra = {}
     for kv in filter(None, extra_conf.split(";")):
         k, _, v = kv.partition("=")
         extra[k.strip()] = v.strip()
-    spark = get_session(
-        SessionConfig(
-            app_name="isolate_time",
-            master=f"local[{cpus}]",
-            shuffle_partitions=cpus,
-            extra=extra,
-        )
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.bench_session(cpus, "isolate_time", extra)
 
     from samza_spark.queries import QUERIES
 
     # session warm-up (JVM, file listing, Python worker pool) — untimed
     QUERIES["passthrough"](spark, sf_dir).count()
-
     results = {}
     for name in names:
-        fn = QUERIES[name]
-        spark.sparkContext.setJobDescription(f"isolate: {name} (warm-up)")
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples = []
-        for i in range(repeats):
-            spark.catalog.clearCache()
-            gc.collect()
-            spark.sparkContext.setJobDescription(f"isolate: {name} [{i}]")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        spark.sparkContext.setJobDescription(None)
-        results[name] = {
-            "median_sec": round(statistics.median(samples), 3),
-            "samples": [round(s, 3) for s in samples],
-        }
+        results[name] = time_query(spark, name, sf_dir, repeats)
         print(f"# {name}: {results[name]}", file=sys.stderr)
+    spark.stop()
     print(json.dumps({
-        "sf_dir": sf_dir, "cpus": cpus, "noop_sink": True,
+        "sf_dir": sf_dir, "cpus": cpus, "timed_action": bench.TIMED_ACTION,
         "extra_conf": extra_conf, "repeats": repeats, "results": results,
-        "cpu_calib_ms": min(_cpu_calib_ms() for _ in range(3)),
-        "load_avg_start": [round(x, 2) for x in la],
+        "cpu_calib_ms": bench.cpu_calib_ms(),
+        "waited_for_idle_sec": waited, "idle_gate_timeout": gate_timeout,
+        "load_avg_start": [round(x, 2) for x in load_start],
         "load_avg_end": [round(x, 2) for x in os.getloadavg()],
     }))
     return 0
