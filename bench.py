@@ -427,13 +427,8 @@ def bench_session(cpus: int, app_name: str = "samza_spark_bench", extra=None):
     and a $SPARK_GRAFT_BENCH_MEM heap (default 8g). The stock 1g is tight
     across a 300+-query session on 32 threads (a GCLocker-adjacent heap OOM
     on an iterative graph op, 176 queries into an otherwise green run);
-    on an idle box the heap does not move timings. The Python workers get
-    this checkout on their path, so a caller may start from any directory."""
+    on an idle box the heap does not move timings."""
     from samza_spark import SessionConfig, get_session
-
-    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
-    if ROOT not in paths:
-        os.environ["PYTHONPATH"] = os.pathsep.join([ROOT] + paths)
 
     spark = get_session(
         SessionConfig(
@@ -732,22 +727,27 @@ def main() -> None:
 
     # Sustained replay at the reference workload size (BASELINE.md #1 runs
     # 1M messages through one container): replicate events to ~1M rows
-    # across 10 files (setup untimed), then stream them through a
-    # multi-batch AvailableNow passthrough.
+    # across 10 files in one write job (setup untimed), then stream them
+    # through a multi-batch AvailableNow passthrough.
     replay_dir = tempfile.mkdtemp(prefix="bench_replay_")
+    replay_files = 10
     try:
         replicas = max(1, 1_000_000 // max(n_events, 1))
-        for i in range(replicas):
-            events_raw.withColumn(
-                "event_id", F.col("event_id") + F.lit(i * 10_000_000)
-            ).write.mode("overwrite" if i == 0 else "append").parquet(replay_dir)
+        (
+            events_raw.crossJoin(spark.range(replicas).withColumnRenamed("id", "__rep"))
+            .withColumn("event_id", F.col("event_id") + F.col("__rep") * 10_000_000)
+            .select(*schema.fieldNames())
+            .repartition(replay_files)
+            .write.mode("overwrite")
+            .parquet(replay_dir)
+        )
         n_replay = replicas * n_events
 
         def replay(batches):
             """The replay as a stream of about ``batches`` micro-batches."""
             return (
                 spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", max(1, replicas // batches))
+                .option("maxFilesPerTrigger", max(1, replay_files // batches))
                 .parquet(replay_dir)
             )
 
@@ -1078,7 +1078,7 @@ def main() -> None:
     # the same sf, cpus and timed action (VERDICT r7 next #3): for each
     # shared streaming rate, the prior median scaled by calib_prev/calib_now
     # is this host's EXPECTATION; only deviations from THAT are genuine
-    # deltas. Full table goes to BENCH_FULL.json; stdout carries ratio +
+    # deltas. Full table goes to BENCH_FULL_sf*_c*.json; stdout carries ratio +
     # >=15% flags only.
     prev_name, prev = _prev_artifact(ROOT, meta["sf"], cpus)
     norm_full = None
@@ -1139,11 +1139,14 @@ def main() -> None:
     # A consumer that keeps only a ~2,000-char stdout tail would truncate
     # a 300-entry "queries" dict on stdout
     # (BENCH_r06 recorded "parsed": null for exactly this reason —
-    # VERDICT r6 next #3). BENCH_FULL.json carries every batch median,
+    # VERDICT r6 next #3). The BENCH_FULL file carries every batch median,
     # the budget and the timed-out samples; stdout carries the
-    # BASELINE.md-comparable headline subset + suite summary stats.
+    # BASELINE.md-comparable headline subset + suite summary stats. The
+    # default name carries the artifact's sf and cpus, so a smoke run never
+    # overwrites a committed record of another scale.
     full_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_FULL_PATH", os.path.join(ROOT, "BENCH_FULL.json")
+        "SPARK_GRAFT_BENCH_FULL_PATH",
+        os.path.join(ROOT, f"BENCH_FULL_sf{meta['sf']}_c{cpus}.json"),
     )
     with open(full_path, "w") as fh:
         json.dump(

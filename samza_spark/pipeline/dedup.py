@@ -1244,9 +1244,9 @@ class CorpusDedupIndex:
         Fingerprints are first-writer-wins (documents admitted through the
         dedup loop never collide — a colliding doc would have been dropped
         as an exact dup; for a bootstrap load of a corpus with internal
-        dups the min-id representative wins). Banding output is eagerly
-        checkpointed so the Arrow UDF runs exactly once per document, not
-        once per later read of the growing bucket table."""
+        dups the min-id representative wins). ``merge_batch`` materialises
+        each input once, so the Arrow UDF runs exactly once per document,
+        not once per later read of the growing bucket table."""
         new_fps = (
             docs.select(
                 F.md5(normalized(F.coalesce(F.col(text_col), F.lit("")))).alias("__fp"),
@@ -1255,7 +1255,6 @@ class CorpusDedupIndex:
             .groupBy("__fp")
             .agg(F.min("ref_id").alias("ref_id"))
             .join(self.fps.df.select("__fp"), on="__fp", how="left_anti")
-            .localCheckpoint(eager=True)
         )
         self.fps.merge_batch(new_fps)
         banded = _lsh_banded(
@@ -1264,7 +1263,7 @@ class CorpusDedupIndex:
             ),
             "__text", "ref_id",
             self.num_perm, self.bands, self.shingle_k, self.shingle_mode,
-        ).select("band", "bucket", "ref_id").localCheckpoint(eager=True)
+        ).select("band", "bucket", "ref_id")
         self.buckets.merge_batch(banded)
         return self
 

@@ -19,11 +19,6 @@ Cross-engine determinism rules used throughout (see each oracle):
 
 from __future__ import annotations
 
-import atexit
-import functools
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from samza_spark.catalog import load_table
@@ -31,25 +26,11 @@ from samza_spark.operators import MessageStream, Windows
 from samza_spark.operators.windows import AccumulationMode, Triggers
 from samza_spark.pipeline import dedup, similarity, text
 from samza_spark.pipeline.multimodal import attach_meta, decode_image
+from samza_spark.spool import spool_dir
 from samza_spark.sql.runner import SqlApplication
 from samza_spark.streaming.stateful import AggSpec, triggered_window_batch
 from samza_spark.tables.local import LocalTable
 from samza_spark.tables.remote import RemoteTable, RateLimiter
-
-@functools.cache
-def _roundtrip_root() -> str:
-    """This process's one root for round-trip files, removed at exit."""
-    root = tempfile.mkdtemp(prefix="ss_roundtrip_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
-
-def _roundtrip_dir(prefix: str) -> str:
-    """A fresh directory for a round-trip query's write-then-read, under
-    :func:`_roundtrip_root`: the returned DataFrame reads its files lazily,
-    so they must outlive the call."""
-    return tempfile.mkdtemp(prefix=prefix, dir=_roundtrip_root())
-
 
 # DuckDB spelling of the normalized-text expression (must mirror
 # samza_spark.pipeline.text.normalized — note the 'g' flag).
@@ -871,7 +852,7 @@ def q_avro_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from samza_spark.formats.avro_py import read_avro, write_avro
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text", "lang", "n_chars")
-    path = _roundtrip_dir("ss_avro_q_")
+    path = spool_dir("ss_avro_q_")
     write_avro(docs, path)
     return read_avro(spark, path).select(
         "doc_id",
@@ -8571,7 +8552,7 @@ def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    path = _roundtrip_dir("ss_csv_q_")
+    path = spool_dir("ss_csv_q_")
     docs.write.mode("overwrite").options(
         header=True, quoteAll=True, escape='"'
     ).csv(path)
@@ -8604,7 +8585,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    path = _roundtrip_dir("ss_jsonl_q_")
+    path = spool_dir("ss_jsonl_q_")
     docs.write.mode("overwrite").json(path)
     back = spark.read.schema(
         "doc_id long, text string, lang string, n_chars long"
@@ -9093,7 +9074,7 @@ def q_schema_evolution_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     new rows keep it; the aggregate proves the merged read loses nothing.
     Oracle replays the expected union from the source table."""
     docs = load_table(spark, sf, "documents")
-    path = _roundtrip_dir("ss_schevo_q_")
+    path = spool_dir("ss_schevo_q_")
     v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "lang", "n_chars"
     )
@@ -10051,7 +10032,7 @@ def q_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    path = _roundtrip_dir("ss_orc_q_")
+    path = spool_dir("ss_orc_q_")
     docs.write.mode("overwrite").orc(path)
     back = spark.read.schema(
         "doc_id long, text string, lang string, n_chars long"
@@ -11555,7 +11536,7 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    path = _roundtrip_dir("ss_tfr_q_")
+    path = spool_dir("ss_tfr_q_")
     write_tfrecords(docs.repartition(8), path).collect()
     back = read_tfrecords(
         spark,
@@ -11598,7 +11579,7 @@ def q_wet_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         )
         .repartition(8)
     )
-    path = _roundtrip_dir("ss_wet_q_")
+    path = spool_dir("ss_wet_q_")
     write_wet(docs, path).collect()
     back = wet_to_documents(read_warc(spark, path))
     return back.select(

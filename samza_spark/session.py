@@ -15,7 +15,9 @@ configuration the rest of the engine assumes:
   (``spark.python.daemon.module``, always set): every task's
   ``importlib.invalidate_caches()`` otherwise re-reads pyspark.zip's
   directory once per cached zip importer (0.2-0.6 s a task on CPython
-  3.11), a fixed cost Samza's long-lived containers never pay per message
+  3.11), a fixed cost Samza's long-lived containers never pay per message.
+  The workers get this package's parent directory on their ``PYTHONPATH``,
+  so a session started from any working directory can run them
 """
 
 from __future__ import annotations
@@ -34,7 +36,8 @@ class SessionConfig:
     ~2-3x total cluster cores for large jobs; at 100 TB input you instead cap
     partition *size* via ``files_max_partition_bytes`` and let AQE coalesce.
 
-    ``extra`` is applied last and overrides any engine default. A
+    ``extra`` is applied last and overrides any engine default, such as
+    the RocksDB ``spark.sql.streaming.stateStore.providerClass``. A
     ``spark.python.daemon.module`` set there replaces the engine's worker
     daemon, and its workers pay the per-task zip re-read again.
     """
@@ -44,7 +47,6 @@ class SessionConfig:
     shuffle_partitions: int | None = None  # None -> cores-based default
     files_max_partition_bytes: str = "128m"
     broadcast_threshold: str = "64m"
-    use_rocksdb_state: bool = True
     session_timezone: str = "UTC"
     extra: dict = field(default_factory=dict)
 
@@ -91,11 +93,13 @@ def get_session(cfg: SessionConfig | None = None) -> SparkSession:
         # every Python worker forks from the engine daemon, which spares it
         # re-reading pyspark.zip's directory on each task (worker_daemon.py)
         "spark.python.daemon.module": "samza_spark.worker_daemon",
-    }
-    if cfg.use_rocksdb_state:
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))
+        ),
+        "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        )
+        ),
+    }
     conf.update(cfg.extra)
     for k, v in conf.items():
         builder = builder.config(k, v)

@@ -568,9 +568,9 @@ def bootstrap_table(spark, source, key_cols, schema=None, spool_dir: str | None 
     back — rows go executor -> files -> executor and NEVER materialize on
     the driver, so an arbitrarily large bootstrap stream works (the
     reference's BootstrappingChooser likewise streams through, it doesn't
-    buffer the stream in one process)."""
-    import tempfile
-
+    buffer the stream in one process). Without ``spool_dir`` the spool
+    lives under :func:`samza_spark.spool.spool_dir`, removed at exit."""
+    from samza_spark.spool import spool_dir as scratch_dir
     from samza_spark.tables.local import LocalTable
 
     if hasattr(source, "read"):
@@ -579,7 +579,7 @@ def bootstrap_table(spark, source, key_cols, schema=None, spool_dir: str | None 
         except Exception:
             pass  # fall through to streaming drain
     stream = source.read_stream(spark)
-    spool = spool_dir or tempfile.mkdtemp(prefix="ss_bootstrap_")
+    spool = spool_dir or scratch_dir("ss_bootstrap_")
     q = (
         stream.df.writeStream.format("parquet")
         .option("path", f"{spool}/data")

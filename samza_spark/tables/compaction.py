@@ -9,6 +9,8 @@ samza-kv/src/main/scala/org/apache/samza/storage/kv/
 KeyValueStorageEngine.scala restore loop: `put` per record, `delete` on
 null value — last write wins; the broker-side analog is Kafka topic
 compaction, which Samza's `changelog` table config relies on).
+``DurableLocalTable.open`` restores its base snapshot plus changelog
+through :func:`compact_changelog`.
 
 Spark-first shape: ONE shuffle. ``max_by(payload, order)`` is a
 declarative aggregate with map-side partial combine, so each executor
@@ -54,7 +56,9 @@ def compact_changelog(
 
     Returns one row per surviving key: ``key_cols + value_cols +
     order_cols`` (the order columns of the winning record are kept so
-    callers can checkpoint "state as of").
+    callers can checkpoint "state as of"). A streaming ``log`` gives the
+    continuously maintained view: one state row per key, and each
+    ``outputMode("update")`` micro-batch emits the keys whose state changed.
     """
     key_cols = list(key_cols)
     order_cols = list(order_cols)
@@ -70,35 +74,6 @@ def compact_changelog(
     if tombstone is not None:
         latest = latest.filter(~tombstone)
     return latest
-
-
-def compact_changelog_stream(
-    log,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    value_cols: "Sequence[str] | None" = None,
-):
-    """Streaming latest-wins: the same ``max_by`` aggregate over an
-    unbounded changelog. Emit with ``outputMode("update")`` and each
-    micro-batch produces exactly the keys whose state changed — the
-    continuously-maintained table view of the changelog (tombstone
-    filtering belongs in the consumer/foreachBatch, since a streaming
-    aggregate cannot retract an already-emitted key).
-
-    Spark keeps one state row per key (the current winner), updated
-    in-place per batch — O(#keys) state, O(#batch) work per trigger.
-    """
-    key_cols = list(key_cols)
-    order_cols = list(order_cols)
-    if value_cols is None:
-        value_cols = [c for c in log.columns if c not in key_cols and c not in order_cols]
-    payload = F.struct(*[F.col(c) for c in list(value_cols) + order_cols])
-    order = F.struct(*[F.col(c) for c in order_cols])
-    return (
-        log.groupBy(*key_cols)
-        .agg(F.max_by(payload, order).alias("__latest"))
-        .select(*key_cols, "__latest.*")
-    )
 
 
 def changelog_history(

@@ -6,11 +6,18 @@ RocksDbTableDescriptor.java:47,201-207,342), InMemoryKeyValueStore
 (samza-api/.../table/ReadWriteUpdateTable.java:46-140).
 
 Samza keeps a per-task RocksDB instance fed by a changelog topic; under
-Spark a *local table* is simply a keyed DataFrame that joins (usually
-broadcast) against the stream — durability comes from the backing files /
-checkpoint rather than a changelog. ``get/put/putAll/delete/range/all``
+Spark a *local table* is a keyed DataFrame that joins (usually broadcast)
+against the stream. ``get/put/putAll/delete/range/all``
 (KeyValueStore.java:40-152) map to lookups/upserts expressed relationally
 so they stay distributed.
+
+A table's plan only ever holds materialised rows: ``merge_batch`` runs its
+input once — the in-memory table into an eager ``localCheckpoint``,
+:class:`DurableLocalTable` into its changelog, read back from those files
+— so no later read or compaction runs a micro-batch's source scan, join or
+stateful operator again. Durability is that changelog: a
+:class:`DurableLocalTable` restores from its base snapshot plus changelog,
+as Samza's KeyValueStorageEngine restores a store without recomputing it.
 
 TTL (RocksDbTableDescriptor.withTtl, :201-207) maps to a timestamp column +
 filter on read.
@@ -18,10 +25,15 @@ filter on read.
 
 from __future__ import annotations
 
+import functools
+import os
+import shutil
 import time
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from samza_spark.tables.compaction import compact_changelog
 
 
 class LocalTable:
@@ -44,18 +56,31 @@ class LocalTable:
         self.key_cols = list(key_cols)
         self.ttl_ms = ttl_ms
         self._df = df
-        # Every mutation stacks an anti-join+union on the plan; a
-        # long-running upsert stream would otherwise build an ever-deeper
-        # lineage (and re-execute it per batch). Truncate via eager
-        # localCheckpoint every ``compact_every`` mutations — plan depth
-        # stays O(compact_every) for any stream length.
+        # Every mutation stacks an anti-join+union over materialised rows;
+        # ``compact_every`` mutations collapse them into one materialised
+        # table, so plan depth stays O(compact_every) for any stream length.
         self.compact_every = compact_every
         self._mutations_since_compact = 0
+
+    def _materialise(self, rows: DataFrame, mode: str) -> DataFrame:
+        """``rows`` run once; the result's plan reads them, not their source."""
+        if set(self._df.columns) <= set(rows.columns):
+            rows = rows.select(*self._df.columns)
+        return rows.localCheckpoint(eager=True)
+
+    def _compact(self) -> DataFrame:
+        # Coalescing gives a new Dataset over the same plan (an interrupted
+        # action, as in a stopped stream's merge, leaves its Dataset unable
+        # to run again, and ``self._df`` must stay readable) and keeps the
+        # partition count from growing with every union, without a shuffle.
+        spark = self._df.sparkSession
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        return self._df.coalesce(n).localCheckpoint(eager=True)
 
     def _maybe_compact(self) -> None:
         self._mutations_since_compact += 1
         if self.compact_every and self._mutations_since_compact >= self.compact_every:
-            self._df = self._df.localCheckpoint(eager=True)
+            self._df = self._compact()
             self._mutations_since_compact = 0
 
     # -- construction ------------------------------------------------------
@@ -91,24 +116,27 @@ class LocalTable:
     # -- write side (ReadWriteUpdateTable.java:78-140) ---------------------
 
     def merge_batch(self, updates: DataFrame, mode: str = "upsert") -> "LocalTable":
-        """Upsert a batch of rows: last-writer-wins per key.
+        """Upsert a batch of rows (last-writer-wins per key), or with
+        ``mode="delete"`` remove the batch's keys. The one write path.
 
         Implements sendTo(table) / UpdateOptions partial update
         (SendToTableOperatorImpl, SendToTableWithUpdateOperatorImpl) without
-        Delta: anti-join old rows that are being replaced, union the new.
+        Delta: materialise the batch once, anti-join the old rows it
+        replaces, union the new.
         """
-        updates = updates.select(*self._df.columns) if set(self._df.columns) <= set(updates.columns) else updates
-        if mode == "upsert":
-            survivors = self._df.join(
-                updates.select(*self.key_cols), on=self.key_cols, how="left_anti"
-            )
-            self._df = survivors.unionByName(updates, allowMissingColumns=True)
-        elif mode == "delete":
-            self._df = self._df.join(
-                updates.select(*self.key_cols), on=self.key_cols, how="left_anti"
-            )
-        else:
+        if mode == "delete":
+            updates = updates.select(*self.key_cols)
+        elif mode != "upsert":
             raise ValueError(f"unknown merge mode {mode!r}")
+        rows = self._materialise(updates, mode)
+        # a USING anti-join moves the key columns first; keep the table's order
+        survivors = self._df.join(
+            rows.select(*self.key_cols), on=self.key_cols, how="left_anti"
+        ).select(*self._df.columns)
+        self._df = (
+            survivors if mode == "delete"
+            else survivors.unionByName(rows, allowMissingColumns=True)
+        )
         self._maybe_compact()
         return self
 
@@ -120,7 +148,8 @@ class LocalTable:
     ) -> "LocalTable":
         """Partial update: ``updates`` carries the key columns plus any
         subset of value columns; unspecified columns keep their current
-        value (column-wise MERGE).
+        value (column-wise MERGE). The post-image of the affected keys goes
+        through :meth:`merge_batch`.
 
         Implements sendTo(table, UpdateOptions)
         (SendToTableWithUpdateOperatorImpl; UpdateOptions UPDATE_ONLY vs
@@ -137,7 +166,7 @@ class LocalTable:
         u = updates.select(
             *self.key_cols, *[F.col(c).alias(f"__u_{c}") for c in upd_cols]
         )
-        how = "full_outer" if insert_missing else "left_outer"
+        how = "right_outer" if insert_missing else "inner"
         existing = self._df.withColumn("__exists", F.lit(True))
         merged = existing.join(u, on=self.key_cols, how=how)
         is_new = F.col("__exists").isNull()
@@ -154,9 +183,7 @@ class LocalTable:
                 )
             else:
                 out_cols.append(F.col(c))
-        self._df = merged.select(*out_cols)
-        self._maybe_compact()
-        return self
+        return self.merge_batch(merged.select(*out_cols))
 
     def write_stream(self, stream) -> object:
         """sendTo(table) from a streaming source: per-micro-batch merge via
@@ -169,17 +196,18 @@ class DurableLocalTable(LocalTable):
     of Samza's KeyValueStorageEngine (/root/reference samza-kv/src/main/
     scala/org/apache/samza/storage/kv/KeyValueStorageEngine.scala:44-157):
     every mutation appends the POST-IMAGE of the affected keys (or delete
-    markers) to ``{path}/changelog/``; construction restores the
+    markers) to ``{path}/changelog/``, and the table reads those files back
+    instead of holding the batch's plan; construction restores the
     ``{path}/base/`` snapshot plus the changelog with last-writer-wins per
-    key, so state survives session restarts. Compaction (every
-    ``compact_every`` mutations, same knob as the in-memory lineage
-    truncation) snapshots the table to base/ and truncates the changelog —
+    key (:func:`~samza_spark.tables.compaction.compact_changelog`), so
+    state survives session restarts. Compaction (every ``compact_every``
+    mutations) snapshots the table to base/ and truncates the changelog —
     restore cost stays O(table + recent mutations), the exact shape of
     Samza's changelog-topic restore.
 
     Paths must be visible to the driver's filesystem (local or shared
     mount): data moves through Spark jobs, but directory bookkeeping
-    (existence checks, changelog truncation) uses python ``os``.
+    (existence checks, new changelog files, truncation) uses python ``os``.
     """
 
     OP_COL = "__ss_op"
@@ -201,12 +229,12 @@ class DurableLocalTable(LocalTable):
     # -- construction / restore -------------------------------------------
 
     @staticmethod
-    def _has_parquet(d: str) -> bool:
-        import os
+    def _parquet_files(d: str) -> set:
+        return {f for f in os.listdir(d) if f.endswith(".parquet")} if os.path.isdir(d) else set()
 
-        return os.path.isdir(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        )
+    @classmethod
+    def _has_parquet(cls, d: str) -> bool:
+        return bool(cls._parquet_files(d))
 
     @classmethod
     def open(
@@ -220,11 +248,20 @@ class DurableLocalTable(LocalTable):
     ) -> "DurableLocalTable":
         """Open (restoring if the warehouse has state) or create (empty,
         ``schema`` required) a durable table at ``path``."""
-        import os
-
         base, clog = os.path.join(path, "base"), os.path.join(path, "changelog")
-        have_base, have_clog = cls._has_parquet(base), cls._has_parquet(clog)
-        if not have_base and not have_clog:
+        parts = []
+        if cls._has_parquet(base):
+            parts.append(
+                spark.read.parquet(base)
+                .withColumn(cls.OP_COL, F.lit("upsert"))
+                .withColumn(cls.SEQ_COL, F.lit(-1).cast("long"))
+            )
+        seq = 0
+        if cls._has_parquet(clog):
+            clog_df = spark.read.parquet(clog)
+            parts.append(clog_df)
+            seq = (clog_df.agg(F.max(cls.SEQ_COL)).first()[0] or 0) + 1
+        if not parts:
             if schema is None:
                 raise ValueError(
                     f"no state at {path!r} and no schema to create an empty table"
@@ -236,29 +273,13 @@ class DurableLocalTable(LocalTable):
                 ttl_ms=ttl_ms,
                 compact_every=compact_every,
             )
-        parts = []
-        if have_base:
-            parts.append(
-                spark.read.parquet(base)
-                .withColumn(cls.OP_COL, F.lit("upsert"))
-                .withColumn(cls.SEQ_COL, F.lit(-1).cast("long"))
-            )
-        seq = 0
-        if have_clog:
-            clog_df = spark.read.parquet(clog)
-            parts.append(clog_df)
-            seq = (clog_df.agg(F.max(cls.SEQ_COL)).first()[0] or 0) + 1
-        allrows = parts[0]
-        for p in parts[1:]:
-            allrows = allrows.unionByName(p)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*key_cols).orderBy(F.desc(cls.SEQ_COL))
+        log = functools.reduce(DataFrame.unionByName, parts)
+        cols = [c for c in log.columns if c not in (cls.OP_COL, cls.SEQ_COL)]
         df = (
-            allrows.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .filter(F.col(cls.OP_COL) != "delete")
-            .drop(cls.OP_COL, cls.SEQ_COL, "__rn")
+            compact_changelog(
+                log, key_cols, [cls.SEQ_COL], tombstone=F.col(cls.OP_COL) == "delete"
+            )
+            .select(*cols)
             # materialize the restore once (the 50 MB/s restore analog);
             # lookups then hit the checkpointed rows, not base+changelog
             .localCheckpoint(eager=True)
@@ -269,60 +290,39 @@ class DurableLocalTable(LocalTable):
 
     # -- write-through changelog ------------------------------------------
 
-    def _append_changelog(self, rows: DataFrame, op: str) -> None:
-        import os
-
-        out = rows
-        for f in self._df.schema.fields:
-            if f.name not in out.columns:
-                out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-        (
-            out.select(*self._df.columns)
-            .withColumn(self.OP_COL, F.lit(op))
-            .withColumn(self.SEQ_COL, F.lit(self._seq).cast("long"))
-            .write.mode("append")
-            .parquet(os.path.join(self._path, "changelog"))
-        )
+    def _materialise(self, rows: DataFrame, mode: str) -> DataFrame:
+        """Append ``rows`` to the changelog — the one job that runs the
+        batch — and return a read of just the files that append wrote. The
+        schema is passed, so the read launches no job."""
+        clog = os.path.join(self._path, "changelog")
+        before = self._parquet_files(clog)
+        schema = self._df.schema
+        have = dict(rows.dtypes)
+        rows.select(
+            # cast only what differs: each cast costs the driver a type parse
+            *[
+                F.col(f.name) if have.get(f.name) == f.dataType.simpleString()
+                else (F.col(f.name) if f.name in have else F.lit(None))
+                .cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ],
+            F.lit(mode).alias(self.OP_COL),
+            F.lit(self._seq).cast("long").alias(self.SEQ_COL),
+        ).write.mode("append").parquet(clog)
         self._seq += 1
+        written = ",".join(sorted(self._parquet_files(clog) - before))
+        return (
+            self._df.sparkSession.read.schema(schema)
+            .option("pathGlobFilter", f"{{{written}}}")
+            .parquet(clog)
+        )
 
-    def merge_batch(self, updates: DataFrame, mode: str = "upsert") -> "DurableLocalTable":
-        if mode == "delete":
-            keys = updates.select(*self.key_cols).distinct()
-            super().merge_batch(updates, mode)
-            self._append_changelog(keys, "delete")
-        else:
-            super().merge_batch(updates, mode)
-            # the updates ARE the post-image for their keys (merge_batch
-            # requires per-key-unique update rows), so append them
-            # directly — the previous distinct + semi-join read-back cost
-            # two extra full shuffles per batch on the durable write path
-            self._append_changelog(updates, "upsert")
-        return self
-
-    def update_batch(
-        self,
-        updates: DataFrame,
-        insert_missing: bool = False,
-        defaults: Mapping | None = None,
-    ) -> "DurableLocalTable":
-        keys = updates.select(*self.key_cols).distinct()
-        super().update_batch(updates, insert_missing=insert_missing, defaults=defaults)
-        post = self._df.join(keys, on=self.key_cols, how="left_semi")
-        self._append_changelog(post, "upsert")
-        return self
-
-    def _maybe_compact(self) -> None:
-        import os
-        import shutil
-
-        self._mutations_since_compact += 1
-        if self.compact_every and self._mutations_since_compact >= self.compact_every:
-            # checkpoint BEFORE overwriting base: the plan may still read
-            # base/, and eager materialization breaks that dependency
-            self._df = self._df.localCheckpoint(eager=True)
-            self._mutations_since_compact = 0
-            self._df.write.mode("overwrite").parquet(os.path.join(self._path, "base"))
-            shutil.rmtree(os.path.join(self._path, "changelog"), ignore_errors=True)
+    def _compact(self) -> DataFrame:
+        # checkpoint BEFORE truncating: the plan reads the changelog files
+        df = super()._compact()
+        df.write.mode("overwrite").parquet(os.path.join(self._path, "base"))
+        shutil.rmtree(os.path.join(self._path, "changelog"), ignore_errors=True)
+        return df
 
 
 class InMemoryTable(LocalTable):

@@ -90,8 +90,6 @@ def spark():
             app_name="samza_spark_tests",
             master="local[4]",
             shuffle_partitions=4,
-            # keep streaming-state tests light
-            use_rocksdb_state=False,
         )
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -239,3 +239,30 @@ def test_python_workers_start_through_the_engine_daemon(spark):
         [row] = spark.range(0, 1, 1, 1).mapInPandas(probe, "importers long, reads long").collect()
     assert row.importers > 0
     assert row.reads == 0
+
+
+def test_python_workers_import_the_engine_from_any_directory(tmp_path):
+    """A session started from a directory that does not hold the package,
+    with the package only on the driver's ``sys.path``, still starts Python
+    workers (through the engine daemon) and runs a Python UDF."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from pyspark.sql import functions as F\n"
+        "from samza_spark import SessionConfig, get_session\n"
+        "spark = get_session(SessionConfig(master='local[1]', shuffle_partitions=1))\n"
+        "plus = F.udf(lambda x: x + 1, 'long')\n"
+        "print('ROWS', [r[0] for r in spark.range(3).select(plus('id')).collect()])\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "ROWS [1, 2, 3]" in out.stdout, out.stderr[-2000:]

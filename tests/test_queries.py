@@ -6,13 +6,13 @@ import sys
 
 
 def test_roundtrip_dirs_are_removed_at_exit(tmp_path):
-    """Round-trip queries write under one per-process root, and the root is
-    gone once the interpreter exits."""
+    """Round-trip queries (and bootstrap spools) write under one per-process
+    root, and the root is gone once the interpreter exits."""
     code = (
         "import os\n"
         "from samza_spark import queries\n"
-        "d = queries._roundtrip_dir('ss_csv_q_')\n"
-        "assert os.path.isdir(d) and queries._roundtrip_dir('ss_orc_q_') != d\n"
+        "d = queries.spool_dir('ss_csv_q_')\n"
+        "assert os.path.isdir(d) and queries.spool_dir('ss_orc_q_') != d\n"
         "print(os.path.dirname(d))\n"
     )
     env = dict(os.environ, TMPDIR=str(tmp_path))

@@ -275,6 +275,23 @@ def test_bootstrap_table_drains_stream_first(spark, tmp_path):
     assert t2.df.count() == 2
 
 
+def test_bootstrap_table_spools_under_the_removed_root(spark, tmp_path):
+    """Without ``spool_dir`` a drained bootstrap stream spools under the
+    process's one spool root, which is removed at exit."""
+    import os
+
+    from samza_spark import spool
+    from samza_spark.sources import FileSource, bootstrap_table
+
+    d = tmp_path / "boot_root"
+    d.mkdir()
+    spark.createDataFrame([(1, "a")], "id int, v string").write.parquet(str(d / "f1"))
+    src = FileSource(f"{d}/*", schema="id int, v string")
+    src.read = None  # force the streaming-drain path
+    assert bootstrap_table(spark, src, ["id"]).df.count() == 1
+    assert any(n.startswith("ss_bootstrap_") for n in os.listdir(spool._root()))
+
+
 def test_es_sink_bulk_runs_executor_side(spark, tmp_path):
     """ES sink builds bulk actions per PARTITION on executors (no driver
     collect) and honors max_actions_per_bulk chunking
@@ -404,3 +421,116 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     q.awaitTermination(30)
     rows = sorted(r.event_id for r in sink.collect(spark))
     assert rows == ["e1", "e2"]
+
+
+def test_durable_table_stream_evaluates_each_row_once(spark, tmp_path):
+    """A merge materialises its batch once: a side-effecting UDF streamed
+    into a DurableLocalTable that compacts every 2nd merge runs once per
+    row, and base/ holds the values the changelog recorded."""
+    import os
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    calls = str(tmp_path / "calls")
+    os.makedirs(calls)
+
+    def tag(k, _calls=calls):
+        # executor-side recorder: one file per call, named key-value
+        v = uuid.uuid4().hex
+        open(f"{_calls}/{k}-{v}", "w").close()
+        return v
+
+    tag_udf = F.udf(tag, "string").asNondeterministic()
+    src = tmp_path / "src"
+    for b in range(5):  # five files, one micro-batch each
+        spark.range(b * 4, b * 4 + 4).selectExpr("CAST(id AS INT) AS k").coalesce(
+            1
+        ).write.parquet(str(src / f"b{b}"))
+    path = str(tmp_path / "wh")
+    t = DurableLocalTable.open(
+        spark, path, ["k"], schema="k int, v string", compact_every=2
+    )
+    q = (
+        spark.readStream.schema("k int")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+        .select("k", tag_udf("k").alias("v"))
+        .writeStream.foreachBatch(lambda b, _e: t.merge_batch(b))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    recorded = {}
+    for name in os.listdir(calls):
+        k, v = name.split("-")
+        recorded.setdefault(int(k), []).append(v)
+    assert {k: len(vs) for k, vs in recorded.items()} == {k: 1 for k in range(20)}
+    base = {r.k: r.v for r in spark.read.parquet(os.path.join(path, "base")).collect()}
+    clog = {
+        r.k: r.v for r in spark.read.parquet(os.path.join(path, "changelog")).collect()
+    }
+    assert len(base) == 16 and len(clog) == 4  # compacted after merges 2 and 4
+    assert {**base, **clog} == {k: vs[0] for k, vs in recorded.items()}
+    assert {r.k: r.v for r in t.df.collect()} == {**base, **clog}
+
+
+def test_local_table_holds_triggered_window_stream_rows(spark, tmp_path):
+    """An in-memory table fed by a triggered-window stream, compacting every
+    2nd merge, holds exactly the replay's panes: no compaction or read runs
+    a committed micro-batch's stateful operator again. Each window gets 2
+    rows per batch against a count(2) trigger, so the stream fires where the
+    replay does."""
+    import datetime as dt
+    import os
+
+    from samza_spark.operators import Windows
+    from samza_spark.operators.windows import AccumulationMode, Triggers
+    from samza_spark.sources import FileSource
+    from samza_spark.streaming.stateful import (
+        AggSpec,
+        await_condition,
+        triggered_window_batch,
+    )
+
+    schema = "k string, t timestamp, v double"
+    batches = [
+        [(k, dt.datetime(2024, 1, 1, 10, 0, s), float(s) * m)
+         for k, m in (("a", 1.5), ("b", -0.25))
+         for s in (off, off + 1, 6 + off, 7 + off)]
+        for off in (0, 2)
+    ]
+    for i, rows in enumerate(batches):
+        d = tmp_path / "src" / f"b{i}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(d))
+        for f in d.iterdir():  # distinct mtimes -> deterministic batch order
+            os.utime(f, (1_700_000_000 + i * 10,) * 2)
+    spec = (
+        Windows.keyed_tumbling_window("k", "t", "6 seconds")
+        .set_early_trigger(Triggers.count(2))
+        .set_accumulation_mode(AccumulationMode.ACCUMULATING)
+    )
+    aggs = [AggSpec("n", "count"), AggSpec("s", "sum", "v")]
+    replay = triggered_window_batch(
+        spark.createDataFrame(batches[0] + batches[1], schema), spec, aggs
+    )
+    table = LocalTable(
+        spark.createDataFrame([], replay.schema),
+        ["k", "window_start", "pane_seq"],
+        compact_every=2,
+    )
+    src = FileSource(f"{tmp_path}/src/*", schema=schema, max_files_per_trigger=1)
+    q = src.read_stream(spark).window(spec, *aggs).send_to_table(table)
+
+    def all_closed():  # every row read and no window open: final panes merged
+        p = q.lastProgress
+        return bool(
+            p and p["stateOperators"] and p["stateOperators"][0]["numRowsTotal"] == 0
+            and sum(x["numInputRows"] for x in q.recentProgress) == 16
+        )
+
+    ok = await_condition(q, all_closed, timeout_s=90)
+    q.stop()
+    q.awaitTermination(30)
+    assert ok, f"expected 4 final panes, got {table.df.collect()}"
+    assert sorted(map(tuple, table.df.collect())) == sorted(map(tuple, replay.collect()))

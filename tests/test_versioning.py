@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from samza_spark.pipeline import decontam, versioning
-from samza_spark.tables.compaction import compact_changelog, compact_changelog_stream
+from samza_spark.tables.compaction import compact_changelog
 
 LOG_ROWS = [
     # (key, ts, offset, val)
@@ -55,7 +55,7 @@ def test_compact_is_partitioning_invariant(spark):
 
 
 def test_compact_stream_matches_batch(spark):
-    """The streaming max_by aggregate drained with availableNow must end
+    """compact_changelog over a stream, drained with availableNow, must end
     at the same table state as batch compaction (tombstone filtering is
     the consumer's job in streaming — compare without it)."""
     log = _log(spark)
@@ -63,7 +63,7 @@ def test_compact_stream_matches_batch(spark):
         log.repartition(3).write.parquet(f"{d}/log")
         src = spark.readStream.schema(log.schema).parquet(f"{d}/log")
         q = (
-            compact_changelog_stream(src, ["key"], ["ts", "off"])
+            compact_changelog(src, ["key"], ["ts", "off"])
             .writeStream.format("memory")
             .queryName("compact_state")
             .outputMode("complete")
